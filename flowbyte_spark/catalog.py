@@ -9,14 +9,28 @@ DataFrame API alike.
 Parquet + temp views keep scans pruned and pushed down: filters and column
 selections land in the parquet reader (check ``PushedFilters``/``ReadSchema``
 in ``df.explain('formatted')``).
+
+``read_parquet`` is the engine's one parquet reader for local paths: it
+serves schemas from a metastore-style cache keyed on the path's identity,
+which the engine's own writers (``ParquetTable``) keep current, so a read
+does not pay Spark's schema-inference job.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    LongType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -38,21 +52,88 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Catalog metadata cache: (path, mtime) → resolved Spark schema and
-# nanos-column list.  A real engine's metastore serves table schemas from
-# metadata, not by re-reading parquet footers on every query — locally the
-# re-inference (file listing + footer parse + a py4j round-trip per table)
-# costs ~90 ms per load_table call, pure per-query dispatch floor.  The
-# mtime key invalidates on fixture rewrite (scratch tables are rewritten
-# in place by mutation tests).
-_META_CACHE: dict[tuple[str, float], tuple] = {}
+# Parquet schema cache, shared by every engine reader of a local parquet
+# path (``load_table``, ``ParquetTable.read``, the compat warehouse views).
+# Spark's parquet schema inference launches a job on every
+# ``spark.read.parquet`` (file listing + footer parse); a metastore serves
+# the schema from metadata instead, and so does this cache: a hit reads
+# with ``spark.read.schema(known)``, which launches nothing.
+#
+# An entry is valid for one identity of its path, ``(st_ino,
+# st_mtime_ns)``.  Every writer that replaces a table changes it: a rename
+# swap (``ParquetTable``) brings a new inode, and adding or removing a
+# file in a table directory moves the directory's mtime.  Engine writers
+# record the schema they just wrote (``record_schema``), so a read after
+# an engine write skips inference too.  Paths ``os.stat`` cannot see
+# (object stores, URIs) are never cached.  Every lookup compares the
+# identity again, so threads racing on one path can lose an entry but
+# never serve a schema recorded for another state of the path.
+@dataclass
+class _Entry:
+    identity: tuple[int, int]
+    schema: StructType
+    nano_long: list[str] | None = None  # load_table's nanos columns, on first use
 
 
-def _cache_key(path: str) -> tuple[str, float] | None:
+_SCHEMAS: dict[str, _Entry] = {}
+
+
+def _identity(path: str) -> tuple[int, int] | None:
     try:
-        return (path, os.stat(path).st_mtime)
+        st = os.stat(path)
     except OSError:
         return None
+    return (st.st_ino, st.st_mtime_ns)
+
+
+def _entry(path: str) -> _Entry | None:
+    """The cached entry for ``path`` if it matches the path as it is now."""
+    entry = _SCHEMAS.get(os.path.abspath(path))
+    if entry is None or entry.identity != _identity(path):
+        return None
+    return entry
+
+
+def cached_schema(path: str) -> StructType | None:
+    entry = _entry(path)
+    return entry.schema if entry is not None else None
+
+
+def as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable: the schema
+    Spark reads back from parquet it wrote, whatever the frame declared."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, as_nullable(f.dataType), True, f.metadata)
+             for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(as_nullable(dt.keyType), as_nullable(dt.valueType), True)
+    return dt
+
+
+def record_schema(path: str, schema: StructType) -> None:
+    """Record the schema a writer just wrote to ``path`` (as parquet reads
+    it back: every field nullable) under the path's current identity."""
+    identity = _identity(path)
+    if identity is None:
+        return
+    _SCHEMAS[os.path.abspath(path)] = _Entry(identity, as_nullable(schema))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema served from the cache
+    when the path has not changed since it was last read or written."""
+    known = cached_schema(path)
+    if known is not None:
+        return spark.read.schema(known).parquet(path)
+    identity = _identity(path)
+    df = spark.read.parquet(path)
+    if identity is not None and identity == _identity(path):
+        _SCHEMAS[os.path.abspath(path)] = _Entry(identity, df.schema)
+    return df
 
 
 def _nano_timestamp_cols(path: str) -> list[str]:
@@ -96,19 +177,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     - parquet naive timestamps (Spark 4 reads TIMESTAMP_NTZ): cast to
       LTZ, value-preserving under the UTC session.
     """
-    from pyspark.sql.types import LongType
-
     path = table_path(sf_dir, name)
-    key = _cache_key(path)
-    hit = _META_CACHE.get(key) if key is not None else None
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if hit is not None:
-        raw_schema, nano_long, ntz = hit
-        # Metastore-style hit: hand the reader the known schema so the
-        # scan skips listing-time footer inference entirely.
-        df = spark.read.schema(raw_schema).parquet(path)
+    df = read_parquet(spark, path)
+    entry = _entry(path)
+    schema = entry.schema if entry is not None else df.schema
+    if entry is not None and entry.nano_long is not None:
+        nano_long = entry.nano_long
     else:
-        df = spark.read.parquet(path)
         # Gate on what Spark ACTUALLY read: true nanos columns surface as
         # LONG under nanosAsLong and need the micros rewrite; INT96
         # columns (Spark's legacy write default) also report ns in the
@@ -117,14 +193,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         nano_long = [
             c
             for c in _nano_timestamp_cols(path)
-            if isinstance(df.schema[c].dataType, LongType)
+            if isinstance(schema[c].dataType, LongType)
         ]
-        ntz = [
-            f.name for f in df.schema.fields
-            if f.dataType.typeName() == "timestamp_ntz"
-        ]
-        if key is not None:
-            _META_CACHE[key] = (df.schema, nano_long, ntz)
+        if entry is not None:
+            entry.nano_long = nano_long
+    ntz = [
+        f.name for f in schema.fields
+        if f.dataType.typeName() == "timestamp_ntz"
+    ]
     for c in nano_long:
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
     if ntz:

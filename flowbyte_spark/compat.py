@@ -17,6 +17,9 @@ same calls and executes them on the engine:
 
 Warehouse layout: ``host`` is a directory, ``database`` a subdirectory,
 each table a parquet dir/file named ``{schema}.{table}`` (dbo default).
+Every table is re-registered as a view after each write; the schemas come
+from the catalog's schema cache (``catalog.read_parquet``), so only a table
+changed outside the engine costs a schema-inference job.
 """
 
 from __future__ import annotations
@@ -30,6 +33,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from flowbyte_spark import log as _log
+from flowbyte_spark.catalog import read_parquet
 from flowbyte_spark.operators.casts import apply_casts, normalize_decimals
 from flowbyte_spark.operators.mutate import ParquetTable
 from flowbyte_spark.session import get_spark
@@ -130,18 +134,27 @@ class MSSQL(SQL):
 
     def _register_warehouse(self) -> None:
         """Register every warehouse table as a view under its bare table
-        name (and nothing else: temp view names cannot contain dots)."""
+        name (and nothing else: temp view names cannot contain dots).
+
+        Runs after every write, so schemas come from the catalog's schema
+        cache: a table this engine wrote or already read is registered
+        without a Spark job; only a table changed by outside code is
+        re-inferred.  The swap protocol's ``__tmp__``/``__bak__`` siblings
+        are not tables; any other table that fails to read is skipped
+        with a warning."""
         db = self._db_dir()
         if not os.path.isdir(db):
             return
         for entry in sorted(os.listdir(db)):
+            if ".__tmp__" in entry or ".__bak__" in entry:
+                continue
             path = os.path.join(db, entry)
             stem = entry[:-8] if entry.endswith(".parquet") else entry
             table = stem.split(".", 1)[1] if "." in stem else stem
             try:
-                self.spark.read.parquet(path).createOrReplaceTempView(table)
-            except Exception:
-                continue
+                read_parquet(self.spark, path).createOrReplaceTempView(table)
+            except Exception as e:
+                _log.warning(f"skipped warehouse table {entry}: {e}")
 
     def _table(self, schema_name: str | None, table_name: str) -> ParquetTable:
         return ParquetTable(self.spark, self._table_path(schema_name, table_name))

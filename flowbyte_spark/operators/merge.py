@@ -20,15 +20,51 @@ Catalyst/AQE falls back to a shuffled join automatically — still one pass.
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DataType,
+    StringType,
+    StructField,
+    StructType,
+    _infer_type,
+    _merge_type,
+)
 
 from flowbyte_spark import log
 
 
 def _has(col: str) -> str:
     return f"__has_{col}__"
+
+
+def _records_to_df(
+    spark: SparkSession, rows: Sequence[tuple], schema: StructType
+) -> DataFrame:
+    """A DataFrame of ``rows`` under ``schema``, shipped as one Arrow batch.
+
+    ``createDataFrame(rows, schema)`` would pickle the rows into a Python
+    RDD, which starts the PySpark daemon and its workers to unpickle them;
+    an Arrow table is decoded by the JVM alone.  Values go through
+    ``schema.toInternal`` first, exactly as the row path converts them
+    (naive datetimes included), so both paths store the same values.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    internal = [schema.toInternal(r) for r in rows]
+    columns = list(zip(*internal)) if internal else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(col, type=to_arrow_type(f.dataType))
+            for col, f in zip(columns, schema.fields)
+        ],
+        names=schema.names,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _updates_to_df(
@@ -41,7 +77,7 @@ def _updates_to_df(
     For record lists, a column ABSENT from a dict and a column explicitly
     set to None are different operations in the reference (sql.py:233-245
     issues ``UPDATE … SET`` only for keys the record contains, and SQL SET
-    happily writes NULL).  ``createDataFrame`` folds both to NULL, so each
+    happily writes NULL).  A plain conversion folds both to NULL, so each
     record is augmented with a boolean presence marker per column.  For
     DataFrame inputs every column is present in every row (SQL UPDATE…FROM
     semantics) and no markers are needed.
@@ -64,11 +100,9 @@ def _updates_to_df(
             if c not in cols:
                 cols.append(c)
 
-    from pyspark.sql.types import BooleanType, StringType, StructField, StructType
-
     tgt_types = tgt_types or {}
 
-    def _col_type(c: str):
+    def _col_type(c: str) -> DataType:
         vals = [r[c] for r in records if r.get(c) is not None]
         if vals:
             # Mixed int/float in one column would make Spark's schema merge
@@ -85,9 +119,8 @@ def _updates_to_df(
                     if r.get(c) is not None:
                         r[c] = float(r[c])
                 vals = [float(v) for v in vals]
-            return spark.createDataFrame(
-                [(v,) for v in vals], ["x"]
-            ).schema[0].dataType
+            # the per-value inference createDataFrame applies to rows
+            return reduce(_merge_type, map(_infer_type, vals))
         if c in tgt_types:  # all-None: any type holds NULL — use the target's
             return tgt_types[c]
         return StringType()  # all-None column not in target: dropped later
@@ -100,7 +133,7 @@ def _updates_to_df(
         tuple(r.get(c) for c in cols) + tuple(c in r for c in cols)
         for r in records
     ]
-    return spark.createDataFrame(rows, schema), True
+    return _records_to_df(spark, rows, schema), True
 
 
 def prepare_update_delta(

@@ -25,7 +25,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flowbyte_spark import log
+from flowbyte_spark import catalog, log
 from flowbyte_spark.operators.merge import update_by_keys, update_from_table
 from flowbyte_spark.operators.table import Table
 
@@ -40,7 +40,7 @@ class ParquetTable(Table):
     # -- read ---------------------------------------------------------------
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return catalog.read_parquet(self.spark, self.path)
 
     def exists(self) -> bool:
         return os.path.exists(self.path)
@@ -65,6 +65,9 @@ class ParquetTable(Table):
             if had_old:
                 os.rename(bak, self.path)  # roll back
             raise
+        # The new directory's schema is the frame's: seed the schema cache
+        # so the next read() skips parquet inference (a job per read).
+        catalog.record_schema(self.path, df.schema)
         if had_old:
             shutil.rmtree(bak, ignore_errors=True)
 
@@ -86,7 +89,13 @@ class ParquetTable(Table):
             # latter needs a df.count() job (an extra full pass) just to
             # size the partition count.
             writer = writer.option("maxRecordsPerFile", int(batchsize))
+        known = catalog.cached_schema(self.path)
         writer.parquet(self.path)
+        # New files move the directory's identity, which retires the cached
+        # schema.  It still holds when the appended frame reads back as the
+        # same schema; otherwise inference decides on the next read.
+        if known is not None and catalog.as_nullable(df.schema) == known:
+            catalog.record_schema(self.path, known)
         log.success(f"appended into {self.path}")
 
     def truncate(self) -> None:

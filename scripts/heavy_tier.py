@@ -55,7 +55,7 @@ def main() -> None:
         _REPO, ".tmp", "heavy_tier.json"
     )
     cpus = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
     )
     sf1x = os.path.join(_REPO, ".tmp", "sf1x")
     if not os.path.isdir(sf1x):
@@ -74,14 +74,30 @@ def main() -> None:
     subprocess.run(
         [sys.executable, os.path.join(_REPO, "bench.py")], check=True, env=env
     )
+    os.makedirs(os.path.dirname(os.path.abspath(out)), exist_ok=True)
     shutil.copyfile(os.path.join(_REPO, "BENCH_ONLY.json"), out)
     with open(out) as fh:
         data = json.load(fh)
-    print(
-        f"heavy tier ({cpus} cpus): total "
-        f"{sum(v for v in data['queries'].values() if v >= 0):.1f} s -> {out}"
-    )
+    sys.exit(report(data["queries"], cpus, out))
 
+
+def report(queries: dict[str, float], cpus, out: str) -> int:
+    """Print the heavy-tier total; returns the exit status.
+
+    bench.py reports a failed query as -1.0.  A total without it would
+    read as a speed-up, so failures are named and the status is 1."""
+    failed = sorted(q for q, v in queries.items() if v < 0)
+    total = sum(v for v in queries.values() if v >= 0)
+    if failed:
+        print(
+            f"heavy tier ({cpus} cpus): FAILED {', '.join(failed)}; "
+            f"total of the {len(queries) - len(failed)} others "
+            f"{total:.1f} s is not comparable -> {out}",
+            file=sys.stderr,
+        )
+        return 1
+    print(f"heavy tier ({cpus} cpus): total {total:.1f} s -> {out}")
+    return 0
 
 if __name__ == "__main__":
     main()

@@ -84,6 +84,16 @@ def test_validator_rejects_failed_query_sentinel_type():
         check_lines([bad])
 
 
+def test_heavy_tier_names_failed_queries(capsys):
+    from heavy_tier import report
+
+    assert report({"v03_agg_q1": 2.0, "v22_minhash_lsh": 3.0}, 4, "o.json") == 0
+    assert "total 5.0 s" in capsys.readouterr().out
+    assert report({"v03_agg_q1": 2.0, "v22_minhash_lsh": -1.0}, 4, "o.json") == 1
+    err = capsys.readouterr().err
+    assert "FAILED v22_minhash_lsh" in err and "total of the 1 others 2.0 s" in err
+
+
 def test_bench_subprocess_honors_env_and_prints_parseable_json(tmp_path):
     """One-query bench run in a fresh JVM: the full driver contract.
 

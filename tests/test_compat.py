@@ -150,6 +150,24 @@ def test_update_from_table_column_quirk(conn, spark):
     assert "RENAMED" not in set(pdf["n_name"])     # quirk preserved
 
 
+def test_register_warehouse_skips_swap_siblings_and_warns(warehouse, capsys):
+    """A swap temp/backup directory is not a table and is skipped quietly;
+    a table that fails to read is skipped with a warning naming it."""
+    import os
+
+    db = os.path.join(warehouse, "salesdb")
+    os.makedirs(os.path.join(db, "dbo.nation.__tmp__0123abcd"))
+    os.makedirs(os.path.join(db, "dbo.nation.__bak__0123abcd"))
+    with open(os.path.join(db, "dbo.broken.parquet"), "w") as fh:
+        fh.write("not parquet")
+    c = MSSQL("spark", warehouse, "salesdb", "u", "p", "")
+    c.connect()
+    err = capsys.readouterr().err
+    assert "skipped warehouse table dbo.broken.parquet" in err
+    assert "__tmp__" not in err and "__bak__" not in err
+    assert len(c.get_data("SELECT * FROM nation")) == 25
+
+
 def test_log_parity(capsys):
     Log("all good", "success").print_message()
     out = capsys.readouterr().out

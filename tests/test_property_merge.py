@@ -8,8 +8,12 @@ the point, not volume.
 
 from __future__ import annotations
 
+from datetime import date, datetime
+from decimal import Decimal
+from unittest import mock
+
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -157,6 +161,80 @@ def test_all_none_column_overwrites_with_null(spark):
     assert out[1] == (None, "base")
     assert out[2] == (None, "base")
     assert out[3] == (30.0, "base")
+
+
+# Record deltas travel to the JVM as an Arrow table
+# (merge._records_to_df).  The reference is the path it replaced:
+# createDataFrame over the same rows and explicit schema.
+typed_delta_strategy = st.lists(
+    st.fixed_dictionaries(
+        {"id": st.sampled_from(KEYS + [99, None])},
+        optional={
+            "val": st.one_of(  # mixed int/float in one column
+                st.none(),
+                st.integers(-1000, 1000),
+                st.floats(-1e6, 1e6, allow_nan=False, width=32),
+            ),
+            "n": st.one_of(st.none(), st.integers(-(2**62), 2**62)),
+            "flag": st.one_of(st.none(), st.booleans()),
+            "amt": st.one_of(
+                st.none(),
+                st.decimals(-9999, 9999, places=2, allow_nan=False),
+            ),
+            "d": st.one_of(
+                st.none(), st.dates(date(1900, 1, 1), date(2100, 12, 31))
+            ),
+            "ts": st.one_of(  # naive datetimes
+                st.none(),
+                st.datetimes(datetime(1971, 1, 1), datetime(2100, 12, 31)),
+            ),
+            "tag": st.one_of(st.none(), st.text("xyz", max_size=3)),
+            "note": st.none(),  # None in every record that carries it
+        },
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+def typed_df(spark):
+    return spark.createDataFrame(
+        [
+            (
+                k, float(k), k * 1000, k % 2 == 0, Decimal(k) / 4,
+                date(2000, 1, k), datetime(2000, 1, k, k, k, k), "base", "n",
+            )
+            for k in KEYS
+        ],
+        "id LONG, val DOUBLE, n LONG, flag BOOLEAN, amt DECIMAL(12, 2), "
+        "d DATE, ts TIMESTAMP, tag STRING, note STRING",
+    )
+
+
+def _rows_delta(spark, rows, schema):
+    return spark.createDataFrame(rows, schema)
+
+
+@given(delta=typed_delta_strategy)
+@example(  # every type at once, a 63-bit int beside a None, mixed int/float
+    delta=[
+        {"id": 1, "n": 2**62 + 1, "val": 1, "ts": datetime(2001, 2, 3, 4, 5, 6, 7)},
+        {
+            "id": 2, "n": None, "val": 2.5, "flag": True, "amt": Decimal("1.25"),
+            "d": date(2020, 1, 1), "tag": None, "note": None,
+        },
+    ]
+)
+@SETTINGS
+def test_arrow_delta_matches_row_delta(spark, delta):
+    from flowbyte_spark.operators import merge
+
+    target = typed_df(spark).cache()
+    got = as_rows(update_by_keys(target, delta, ["id"]))
+    with mock.patch.object(merge, "_records_to_df", _rows_delta):
+        want = as_rows(update_by_keys(target, delta, ["id"]))
+    target.unpersist()
+    assert got == want
 
 
 @given(

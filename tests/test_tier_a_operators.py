@@ -154,6 +154,127 @@ def test_delete_where_rejects_garbage(spark, target, tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# Parquet schema cache: engine writers keep it equal to Spark's inference
+# ---------------------------------------------------------------------------
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _bal_as_string(spark):
+    # note is a literal, so non-nullable in the frame but not in the files
+    return spark.createDataFrame(
+        [(7, "g", "70.0")], "id LONG, name STRING, bal STRING"
+    ).withColumn("note", F.lit("seven"))
+
+
+def _append_same(spark, table):
+    table.append(spark.createDataFrame([(4, "d", 40.0)], SCHEMA))
+
+
+def _append_other(spark, table):
+    table.append(
+        spark.createDataFrame(
+            [(5, "e", 50.0, "x")], "id LONG, name STRING, bal DOUBLE, note STRING"
+        )
+    )
+
+
+def _outside_overwrite(spark, table):
+    _bal_as_string(spark).write.mode("overwrite").parquet(table.path)
+
+
+def _outside_file_added(spark, table):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"id": [9], "name": ["i"], "bal": [90.0]}),
+        f"{table.path}/outside.parquet",
+    )
+
+
+CACHE_OPS = {
+    "append_same_schema": _append_same,
+    "append_other_schema": _append_other,
+    "overwrite_new_schema": lambda spark, t: t.overwrite(_bal_as_string(spark)),
+    "delete_where": lambda spark, t: t.delete_where("bal >= 20.0"),
+    "truncate": lambda spark, t: t.truncate(),
+    "update_by_keys": lambda spark, t: t.update_by_keys(
+        [{"id": 2, "name": None}, {"id": 3, "bal": 3.5}], ["id"]
+    ),
+    "update_from_table": lambda spark, t: t.update_from_table(
+        spark.createDataFrame([("skip", 1, 1.5)], "name STRING, id LONG, bal DOUBLE"),
+        ["id"],
+    ),
+    # outside code rewriting the table, or adding a file to it
+    "outside_overwrite": _outside_overwrite,
+    "outside_file_added": _outside_file_added,
+}
+
+
+@pytest.mark.parametrize("op", sorted(CACHE_OPS))
+def test_cached_read_matches_inference(spark, target, tmp_path, op):
+    from flowbyte_spark import catalog
+
+    table = ParquetTable(spark, str(tmp_path / "t"))
+    table.overwrite(target)
+    assert catalog.cached_schema(table.path) is not None  # seeded by the write
+    CACHE_OPS[op](spark, table)
+    if op.startswith("outside") or op == "append_other_schema":
+        assert catalog.cached_schema(table.path) is None  # must re-infer
+    else:
+        assert catalog.cached_schema(table.path) is not None
+    got = table.read()
+    fresh = spark.read.parquet(table.path)
+    assert got.schema == fresh.schema
+    assert _sorted_rows(got) == _sorted_rows(fresh)
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted in a job group of its own (the
+    pattern of compat's get_data progress poller)."""
+    import uuid
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"job-count-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "job-count guard")
+    try:
+        fn()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store caught up
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_after_engine_write_launches_no_job(spark, tmp_path):
+    table = ParquetTable(spark, str(tmp_path / "t"))
+    # non-nullable columns in the frame, nullable ones in the files: the
+    # nullable append below must still match the recorded schema
+    table.overwrite(spark.range(3).withColumn("name", F.lit("x")))
+    assert _jobs_launched(spark, table.read) == 0
+    table.append(spark.createDataFrame([(9, "y")], "id LONG, name STRING"))
+    assert _jobs_launched(spark, table.read) == 0
+
+
+def test_insert_into_existing_table_launches_only_its_write(spark, target, tmp_path):
+    import pandas as pd
+
+    from flowbyte_spark.compat import MSSQL
+
+    ParquetTable(spark, str(tmp_path / "wh" / "db" / "dbo.t")).overwrite(target)
+    db = MSSQL("spark", str(tmp_path / "wh"), "db", "u", "p", None)
+    db.connect()
+    rows_in = pd.DataFrame({"id": [4], "name": ["d"], "bal": [40.0]})
+    assert _jobs_launched(spark, lambda: db.insert_data("dbo", "t", rows_in)) == 1
+    assert db.get_data("SELECT count(*) AS n FROM t")["n"][0] == 4
+
+
+# ---------------------------------------------------------------------------
 # Cast directives
 # ---------------------------------------------------------------------------
 
