@@ -1,22 +1,22 @@
 """Similarity search over embedding columns (array<float>).
 
-Charter scope (the reference has no vector capability).  Three operators:
+Charter scope (the reference has no vector capability).  One exact path
+and one approximate path per job:
 
-- :func:`cosine_topk` — exact brute-force top-k for one query vector.
-  Baseline and always-correct path; one scan, no shuffle (top-k is a
-  TakeOrdered over partial per-partition heaps).
-- :func:`embedding_neardup_pairs` — all pairs above a cosine threshold.
-  Exact O(n²) comparison; the block-join keeps it runnable at fixture
-  scale, LSH/IVF replace it at 100 TB.
-- :func:`ivf_topk` — IVF-style ANN: deterministic coarse centroids, one
-  assignment pass builds the inverted lists, queries probe only the
-  ``nprobe`` nearest lists.  The scale path: search cost drops from O(n)
-  to O(n * nprobe / ncentroids) per query, and the lists partition cleanly
-  across executors.
+- top-k for one query vector: :func:`cosine_topk` (exact, one scan, no
+  shuffle — TakeOrdered over partial per-partition heaps);
+  :func:`ivf_topk` / :func:`ivf_topk_batch` (IVF: queries probe only the
+  ``nprobe`` nearest inverted lists) and :func:`pq_adc_topk` (product
+  quantization: ranks m-byte codes by asymmetric distance).
+- all pairs above a cosine threshold: :func:`embedding_neardup_pairs`
+  (the Catalyst self-join reference) and
+  :func:`embedding_neardup_blocked` (the same pairs from a distributed
+  block-matrix GEMM); :func:`semantic_dedup` blocks pairing by IVF
+  cluster.
 
-All vector math is pure Catalyst (zip_with + aggregate in double
-precision) — see flowbyte_spark.functions — so values are bit-identical
-to the DuckDB oracle's list_* functions.
+The Catalyst paths do their vector math in double precision (zip_with +
+aggregate, see flowbyte_spark.functions), so values are bit-identical to
+the DuckDB oracle's list_* functions.
 """
 
 from __future__ import annotations
@@ -120,68 +120,6 @@ def embedding_neardup_pairs(
     )
 
 
-def embedding_neardup_gemm(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-) -> DataFrame:
-    """All-pairs cosine near-dup via a broadcast-matrix BLAS kernel.
-
-    Same (id_a, id_b, sim) output as :func:`embedding_neardup_pairs` —
-    sim quantized with the q4 convention — but each Arrow batch computes
-    one (batch × dim) @ (dim × n) GEMM against the broadcast corpus matrix
-    instead of n interpreted array folds per row, which removes the O(n²)
-    join entirely from the plan (the scan stays a single narrow pass).
-
-    Applicability mirrors a broadcast join: the corpus matrix (n × dim
-    float64) must fit in executor memory — 64-dim vectors up to ~10M rows
-    at 5 GB.  Past that, block with :func:`ivf_assign` buckets or MinHash
-    LSH (dedup.py) before pairing; this kernel then runs per block.
-
-    NULL embeddings are dropped at entry (:func:`_non_null_vectors` —
-    predicate semantics, matching :func:`embedding_neardup_pairs` where
-    ``NULL >= threshold`` filters the pair out).
-    """
-    import numpy as np
-    import pandas as pd
-
-    df = _non_null_vectors(df, vec_col)
-    spark = df.sparkSession
-    base = df.select(id_col, vec_col).toPandas()
-    ids = base[id_col].to_numpy()
-    mat = np.stack(base[vec_col].to_numpy()).astype(np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    b = spark.sparkContext.broadcast((ids, mat, norms))
-
-    def pairs(batches):
-        all_ids, all_mat, all_norms = b.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bi = pdf[id_col].to_numpy()
-            bn = np.sqrt((bm * bm).sum(axis=1))
-            sims = (bm @ all_mat.T) / np.outer(bn, all_norms)
-            sims = np.floor(sims * 10000.0 + 0.5) / 10000.0
-            ai, aj = np.nonzero(
-                (sims >= threshold) & (bi[:, None] < all_ids[None, :])
-            )
-            if len(ai):
-                yield pd.DataFrame(
-                    {
-                        "id_a": bi[ai],
-                        "id_b": all_ids[aj],
-                        "sim": sims[ai, aj],
-                    }
-                )
-
-    id_t = df.schema[id_col].dataType.simpleString()
-    return ensure_parallelism(df.select(id_col, vec_col)).mapInPandas(
-        pairs, f"id_a {id_t}, id_b {id_t}, sim double"
-    )
-
-
 def embedding_neardup_blocked(
     df: DataFrame,
     id_col: str,
@@ -191,9 +129,9 @@ def embedding_neardup_blocked(
 ) -> DataFrame:
     """Exact all-pairs cosine near-dup, distributed block-matrix GEMM.
 
-    Same output (and same float64 arithmetic, so the same q4-rounded sims)
-    as :func:`embedding_neardup_gemm`, but nothing is collected to the
-    driver: rows hash into ``num_blocks`` blocks, every unordered block
+    Same (id_a, id_b, sim) output as :func:`embedding_neardup_pairs`
+    (sims q4-rounded from float64 arithmetic), with nothing collected to
+    the driver: rows hash into ``num_blocks`` blocks, every unordered block
     pair (i ≤ j) becomes one task, and each task runs the
     (block × dim) @ (dim × block) kernel over exactly two blocks of
     vectors.  Each unordered row pair lives in exactly one block pair, so
@@ -268,68 +206,6 @@ def embedding_neardup_blocked(
         left.unionByName(right)
         .groupBy("bi", "bj")
         .applyInPandas(gemm_pair, f"id_a {id_t}, id_b {id_t}, sim double")
-    )
-
-
-def cosine_topk_gemm(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id,
-    k: int = 5,
-) -> DataFrame:
-    """Brute-force top-k via an Arrow-batched BLAS kernel (mapInPandas).
-
-    Same answer as :func:`cosine_topk` (within float associativity — NumPy
-    reduces pairwise, so values can differ in the last ulp; ranking is
-    stable far beyond that); ~10-50x less CPU per row because each Arrow
-    batch becomes one (batch × dim) @ (dim,) matrix-vector product instead
-    of per-row interpreted array folds.  The per-partition partial top-k
-    keeps the final sort at O(partitions × k).  This is the template for
-    any "score the corpus against one query" kernel at 100 TB.
-
-    Corpus rows with a NULL embedding are dropped at entry
-    (:func:`_non_null_vectors`); a NULL QUERY vector fails loud with a
-    typed error — there is no meaningful ranking against a missing
-    query, and silently returning NULL-sim rows (what the pure-Catalyst
-    twin degrades to) would read as a real answer downstream.
-    """
-    import numpy as np
-    import pandas as pd
-
-    qrow = df.where(F.col(id_col) == query_id).select(vec_col).first()
-    if qrow is None:
-        raise ValueError(f"query id {query_id!r} not found")
-    if qrow[0] is None:
-        raise ValueError(f"query id {query_id!r} has a NULL embedding")
-    df = _non_null_vectors(df, vec_col)
-    qv = np.asarray(qrow[0], dtype=np.float64)
-    qn = np.linalg.norm(qv)
-    spark = df.sparkSession
-    bq = spark.sparkContext.broadcast(qv)
-
-    def score(batches):
-        q = bq.value
-        qnorm = np.linalg.norm(q)
-        best: list[pd.DataFrame] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sims = (mat @ q) / (np.linalg.norm(mat, axis=1) * qnorm)
-            out = pd.DataFrame({"id": pdf[id_col], "sim": np.round(sims, 4)})
-            best.append(out.nlargest(k + 1, "sim"))
-        if best:
-            yield pd.concat(best).nlargest(k + 1, "sim")
-
-    _ = qn
-    scored = df.mapInPandas(
-        score, f"id {df.schema[id_col].dataType.simpleString()}, sim double"
-    )
-    return (
-        scored.where(F.col("id") != query_id)
-        .orderBy(F.col("sim").desc(), F.col("id"))
-        .limit(k)
     )
 
 
@@ -927,9 +803,9 @@ def pq_adc_topk(
     distances, each encoded vector's approximate distance is the exact
     integer sum of its m table entries.  Returns ``(id, adist)`` ranked
     ascending.  Pass ``encoded`` (a prebuilt :func:`pq_encode` result) to
-    amortize encoding across queries — the production pattern.  Recall
-    gate: tests/test_pq_recall.py.  ``codebook`` and ``encoded`` must
-    come from the same training mode — pass both (or neither)."""
+    amortize encoding across queries — the production pattern.
+    ``codebook`` and ``encoded`` must come from the same
+    :func:`pq_codebooks` table — pass both (or neither)."""
     if codebook is None:
         codebook = pq_codebooks(df, id_col, vec_col, codes)
     if encoded is None:
@@ -953,221 +829,3 @@ def pq_adc_topk(
         .orderBy(F.col("adist").asc(), F.col("id"))
         .limit(k)
     )
-
-
-def pq_topk_reranked(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id,
-    k: int = 10,
-    shortlist: int = 100,
-    m: int = 8,
-    dim: int = 64,
-    codes: int = 16,
-    encoded: DataFrame | None = None,
-    codebook: DataFrame | None = None,
-) -> DataFrame:
-    """Two-stage PQ retrieval (the production FAISS pattern): ADC ranks
-    every code vector cheaply, the top ``shortlist`` candidates are
-    re-ranked by EXACT cosine against the raw vectors, and the final
-    top-k comes from the re-rank.  The expensive exact pass touches only
-    ``shortlist`` vectors regardless of corpus size."""
-    cand = F.broadcast(
-        pq_adc_topk(
-            df, id_col, vec_col, query_id,
-            k=shortlist, m=m, dim=dim, codes=codes,
-            encoded=encoded, codebook=codebook,
-        ).select(F.col("id").alias(id_col))
-    )
-    qv = F.broadcast(_query_vector(df, id_col, vec_col, query_id))
-    return (
-        df.join(cand, id_col)
-        .crossJoin(qv)
-        .select(
-            F.col(id_col).alias("id"),
-            q4(cosine_similarity(F.col(vec_col), F.col("__qv__"))).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col("id"))
-        .limit(k)
-    )
-
-
-def pq_codebooks_kmeans(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int = 8,
-    dim: int = 64,
-    codes: int = 16,
-    sample: int = 2048,
-    iters: int = 10,
-    seed: int = 42,
-) -> DataFrame:
-    """Quality codebooks: per-subspace Lloyd k-means on a bounded,
-    deterministic sample (lowest ids), run driver-side in numpy —
-    ``sample x dim`` floats, a few hundred KB regardless of corpus size,
-    the ivf_assign kmeans pattern.  Returns the same ``(code, cvec)``
-    shape as :func:`pq_codebooks` (codeword c's full vector is the
-    concatenation of subspace c-th centroids), so encode/ADC are
-    unchanged.  :func:`pq_codebooks` (lowest-id) stays the
-    engine-portable mode the v87 oracle replicates; this is the
-    production-quality mode (recall gate: tests/test_pq_recall.py).
-    NULL vectors are dropped before the training sample (they cannot
-    train a centroid, and ``np.array`` over a ragged batch would build
-    an object array and crash the subspace slicing)."""
-    import numpy as np
-
-    spark = df.sparkSession
-    ds = dim // m
-    rows = (
-        _non_null_vectors(df, vec_col)
-        .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy("id")
-        .limit(sample)
-        .collect()
-    )
-    X = np.array([r.v for r in rows], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    books = []
-    for j in range(m):
-        S = X[:, j * ds : (j + 1) * ds]
-        # k-means++ seeding, then Lloyd iterations
-        cent = [S[rng.integers(len(S))]]
-        for _ in range(codes - 1):
-            d2 = np.min(
-                ((S[:, None, :] - np.array(cent)[None]) ** 2).sum(-1), axis=1
-            )
-            p = d2 / d2.sum() if d2.sum() > 0 else None
-            cent.append(S[rng.choice(len(S), p=p)])
-        C = np.array(cent)
-        for _ in range(iters):
-            assign = ((S[:, None, :] - C[None]) ** 2).sum(-1).argmin(1)
-            for c in range(codes):
-                mask = assign == c
-                if mask.any():
-                    C[c] = S[mask].mean(0)
-        books.append(C)
-    full = np.concatenate(books, axis=1)  # codes x dim
-    return F.broadcast(
-        spark.createDataFrame(
-            [(int(c), [float(x) for x in full[c]]) for c in range(codes)],
-            f"code int, cvec array<double>",
-        )
-    )
-
-
-def ivfpq_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id,
-    k: int = 10,
-    num_centroids: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    dim: int = 64,
-    codes: int = 16,
-    shortlist: int = 100,
-    centroid_mode: str = "kmeans",
-    seed: int = 42,
-    index: tuple[DataFrame, DataFrame, DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """IVF-PQ: the composed billion-scale ANN structure (FAISS IVFPQ).
-
-    IVF bounds the SCAN (only ``nprobe``/``num_centroids`` of the corpus
-    is touched per query) and PQ bounds the MEMORY (candidates are
-    ranked from m-byte codes, raw vectors touched only for the
-    ``shortlist`` exact re-rank).  Returns ``(id, sim)`` ranked by exact
-    cosine like :func:`cosine_topk`.
-
-    ``index`` — a prebuilt ``(centroids, assignments, codebook,
-    encoded)`` from :func:`ivfpq_build` — amortizes both quantizers
-    across the query stream (the production pattern).
-    """
-    if index is None:
-        index = ivfpq_build(
-            df, id_col, vec_col,
-            num_centroids=num_centroids, m=m, dim=dim, codes=codes,
-            centroid_mode=centroid_mode, seed=seed,
-        )
-    centroids, assignments, codebook, encoded = index
-    qv = F.broadcast(_query_vector(df, id_col, vec_col, query_id))
-    probed = F.broadcast(
-        centroids.crossJoin(qv)
-        .select(
-            "cid",
-            q4(cosine_similarity(F.col("cvec"), F.col("__qv__"))).alias("qsim"),
-        )
-        .orderBy(F.col("qsim").desc(), F.col("cid"))
-        .limit(nprobe)
-        .select("cid")
-    )
-    # candidate ids = union of the probed inverted lists
-    cand_ids = F.broadcast(assignments.join(probed, "cid").select("id"))
-    # ADC over the candidates' CODES only
-    ds = dim // m
-    table = F.broadcast(
-        codebook.crossJoin(qv)
-        .select(
-            "code",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j"),
-            "cvec",
-            "__qv__",
-        )
-        .select(
-            "j",
-            "code",
-            _sub_sqdist_q(F.col("__qv__"), F.col("cvec"), F.col("j"), ds).alias("tq"),
-        )
-    )
-    adc = (
-        encoded.join(cand_ids, "id")
-        .join(table, ["j", "code"])
-        .groupBy("id")
-        .agg(F.sum("tq").alias("aq"))
-        .where(F.col("id") != query_id)
-        .orderBy(F.col("aq").asc(), F.col("id"))
-        .limit(shortlist)
-        .select("id")
-    )
-    # exact cosine re-rank of the shortlist
-    return (
-        df.join(F.broadcast(adc.withColumnRenamed("id", id_col)), id_col)
-        .crossJoin(qv)
-        .select(
-            F.col(id_col).alias("id"),
-            q4(cosine_similarity(F.col(vec_col), F.col("__qv__"))).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col("id"))
-        .limit(k)
-    )
-
-
-def ivfpq_build(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    num_centroids: int = 16,
-    m: int = 8,
-    dim: int = 64,
-    codes: int = 16,
-    centroid_mode: str = "kmeans",
-    seed: int = 42,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Build both quantizers once: (centroids, assignments, codebook,
-    encoded codes).  Persist assignments/encoded before a query stream —
-    the same amortization contract as :func:`ivf_assign`."""
-    centroids, assignments = ivf_assign(
-        df, id_col, vec_col, num_centroids,
-        centroid_mode=centroid_mode, seed=seed,
-    )
-    codebook = (
-        pq_codebooks_kmeans(
-            df, id_col, vec_col, m=m, dim=dim, codes=codes, seed=seed
-        )
-        if centroid_mode == "kmeans"
-        else pq_codebooks(df, id_col, vec_col, codes)
-    )
-    encoded = pq_encode(df, id_col, vec_col, codebook, m, dim)
-    return centroids, assignments, codebook, encoded

@@ -19,180 +19,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
-# Queries introduced AFTER the current round's 50-slot driver window
-# saturated.  Tier-3 coverage contract, pinned by tests/test_registry.py:
-# each entry must carry a hash oracle AND an in-suite differential test
-# (the identical comparison the driver runs), and the NEXT round's window
-# must lead with these names.  Round 13: the 26 r12 post-saturation
-# queries (v135-v160) now LEAD the window per the pinned rotation, so
-# this set is EMPTY — it refills only if round 13 registers queries
-# after its own window saturates.
-POST_WINDOW_NEW: frozenset[str] = frozenset()
-
-# The r13 window held 26 first-driver-row queries + 24 refreshes, which
-# left 16 r10-aged queries un-refreshed.  Those 16 (formerly
-# ``R14_PINNED``) now LEAD round 14's window — see ``_reorder`` —
-# executing the recipe pinned at r13 close exactly.
-R14_PINNED: frozenset[str] = frozenset(
-    {
-        "v68_pii_scrub",
-        "v69_decontaminate",
-        "v73_stream_dedup",
-        "v76_stream_upsert",
-        "v91_lateral_topk",
-        "v92_recursive_cte",
-        "v93_xml_extract",
-        "v94_salted_join",
-        "v96_salted_asof",
-        "v106_data_expectations",
-        "v107_snapshot_diff",
-        "v108_table_profile",
-        "v112_bucketed_smb_join",
-        "v113_null_aware_anti",
-        "v114_correlated_max_order",
-        "v115_profile_approx",
-    }
-)
-
-# The r14 window ran as pinned and CORRECTNESS_r14.json landed 50/50
-# green, so going into round 15 the freshness ledger holds exactly 18
-# r11-aged queries — the residue the r14 window could not hold (16
-# R14_PINNED + 25 r11-aged refills + 9 in-round-changed saturated its
-# 50 slots, displacing 9 planned refills).  These 18 names LEAD round
-# 15's window; tests/test_registry.py derives the same set from the
-# CORRECTNESS_r* ledger (latest driver row <= r11 as of r14, outside
-# the r14 window) so the pin cannot drift.
-R15_PINNED: frozenset[str] = frozenset(
-    {
-        "v56_interleave",
-        "v57_corpus_prep",
-        "v58_cross_join",
-        "v65_repetition_signals",
-        "v71_dsir_importance",
-        "v72_global_shuffle",
-        "v74_domain_cap",
-        "v90_q21_waiting_suppliers",
-        "v100_srp_neardup",
-        "v101_url_dedup",
-        "v102_partition_pruning",
-        "v116_q22_idle_customers",
-        "v117_batched_ann",
-        "v119_stream_outer_join",
-        "v120_skewed_join_agg",
-        "v121_bloom_filter_join",
-        "v123_schema_evolution",
-        "v125_stream_session_window",
-    }
-)
-
-# The r15 window = 18 R15_PINNED + 17 r12-aged refills (lowest query
-# number first: v11-v18, v31, v37-v39, v43, v61, v70, v75, v77) + 15
-# in-round-changed queries (v118/v153 — incremental agg_state
-# NULL-measure fix, VERDICT r14 red #1; v66 — scd2 NULL-key
-# struct-join fix; v107 — snapshot-diff NULL-key struct-join fix;
-# v157 — funnel NULL-user fix, ADVICE r14; v27/v28/v29/v54/v67/v80 —
-# the r14 size(NULL) audit's deferred text.py/substrings.py fixes,
-# whose seventh caller v57 is pinned above; v159 — stateful.py module
-# residue from the running-totals NULL-measure fix, whose caller v75
-# is a refill in-window; v33/v89/v96 — the asof whole-row struct
-# carry, ROW-semantics fix for NULL-valued nearest carriers).  That
-# leaves this 26-query r12-aged residue PINNED to lead round 16's
-# window (after r16 refreshes it plus the 48 r13-aged queries' head,
-# the freshness floor reaches toward r13).
-R16_PINNED: frozenset[str] = frozenset(
-    {
-        "v79_c4_quality_filter",
-        "v81_stream_stream_join",
-        "v82_python_datasource",
-        "v83_jdbc_roundtrip",
-        "v84_media_decode",
-        "v87_pq_ann",
-        "v88_variant_json",
-        "v97_jpeg_decode",
-        "v98_wav_decode",
-        "v99_y4m_decode",
-        "v103_dpp_star_join",
-        "v104_srp_cluster_dedup",
-        "v105_runtime_filter_join",
-        "v109_q7_volume_shipping",
-        "v110_q8_market_share",
-        "v111_stream_static_join",
-        "v122_sparse_cosine_pairs",
-        "v126_schema_widening",
-        "v127_prefix_cosine_pairs",
-        "v128_q17_small_quantity",
-        "v129_doc_chunking",
-        "v130_stream_full_outer_join",
-        "v131_bucketed_agg",
-        "v132_stream_join_window",
-        "v133_stream_dedup_join_window",
-        "v134_cbo_join_order",
-    }
-)
-
-# The r16 window = 26 R16_PINNED (lead, lowest query number first) + 22
-# refills from the 43 r13-aged queries (lowest query number first:
-# v19-v26, v32, v35, v40, v41, v44, v45, v48, v49, v59, v60, v62, v63,
-# v64, v136 — this head covers v20/v25/v26, three of the six queries
-# touched by the round-16 similarity NULL-embedding fix) + the 2
-# remaining in-round-changed queries (v70, v117 — both r15-fresh, both
-# touched by the same fix; v87, the sixth, is already pinned above).
-# That leaves this 21-query r13-aged residue PINNED to lead round 17's
-# window (43 r13-aged = 22 refills + 21 residue; after r17 refreshes
-# it, the freshness floor reaches r14).
-R17_PINNED: frozenset[str] = frozenset(
-    {
-        "v137_incremental_distinct_hll",
-        "v138_q2_min_cost_supplier",
-        "v139_q13_order_distribution",
-        "v140_q20_excess_shippers",
-        "v141_q19_disjunctive_revenue",
-        "v142_q15_top_supplier",
-        "v143_q16_supplier_count",
-        "v144_q11_important_parts",
-        "v145_q14_promo_share",
-        "v146_incremental_topk",
-        "v147_q4_priority_check",
-        "v148_q5_local_volume",
-        "v149_q6_forecast_revenue",
-        "v150_q9_product_profit",
-        "v151_q10_returned_items",
-        "v152_q12_ship_priority",
-        "v154_gapfill_locf",
-        "v155_interval_range_window",
-        "v156_width_bucket_histogram",
-        "v158_cohort_retention",
-        "v160_pagerank",
-    }
-)
-
-# The r17 window = 21 R17_PINNED (lead, lowest query number first) + 29
-# refills from the 41 r14-aged queries, lowest query number first
-# (v01-v10, v30, v34, v36, v42, v46, v47, v50-v53, v55, v68, v69, v73,
-# v76, v78, v85, v86, v91).  That leaves this 12-query r14-aged residue
-# PINNED to lead round 18's window (41 r14-aged = 29 refills + 12
-# residue; after r18 refreshes it, the freshness floor reaches r15).
-# Round 17 is an optimization round: in-round-changed queries outside
-# the window take the amended overflow gate (hash oracle + in-suite
-# differential, test_registry.py) and the driver's full-registry
-# re-run, so the frozen-ledger window stays exactly as pinned.
-R18_PINNED: frozenset[str] = frozenset(
-    {
-        "v92_recursive_cte",
-        "v93_xml_extract",
-        "v94_salted_join",
-        "v95_two_phase_agg",
-        "v106_data_expectations",
-        "v108_table_profile",
-        "v112_bucketed_smb_join",
-        "v113_null_aware_anti",
-        "v114_correlated_max_order",
-        "v115_profile_approx",
-        "v124_incremental_minmax",
-        "v135_incremental_minmax_pruned",
-    }
-)
-
 
 def register(name: str, oracle: str | None = None):
     """Decorator: add a query (and optionally its DuckDB oracle) to the
@@ -240,90 +66,15 @@ def _load_all() -> None:
 _load_all()
 
 
-def _reorder() -> None:
-    """Deterministic driver-facing ordering.
-
-    The driver's correctness sweep caps at 50 queries per round in
-    dict-iteration order, so with 80+ registered queries we rotate which
-    ones lead.  Policy (pinned by tests/test_registry.py via
-    queries/_coverage.py): any query whose code changed in-round — at
-    function granularity, transitively — must also sit inside the
-    50-query window, so in-round rewrites always get an in-round driver
-    row (the gap that shipped v34 broken in r3 and left v64/v65/v67
-    unverified in r4).
-    """
-    # ROUND-17 WINDOW (executes the recipe pinned at r16 close —
-    # VERDICT r16 "next round" #8):
-    # (a) the 21 R17_PINNED r13-aged queries LEAD, lowest number first;
-    # (b) 29 refills from the 41 r14-aged queries, lowest query number
-    # first.  Arithmetic: 21 pinned + 29 refills = 50; 41 r14-aged =
-    # 29 refills + the 12-query residue = R18_PINNED.  Round 17 is an
-    # optimization round, so in-round-changed queries outside this
-    # frozen window take the amended overflow gate (hash oracle +
-    # in-suite differential) instead of displacing refills — see the
-    # R18_PINNED comment and test_registry.py.
-    first = [
-        # (a) r13-aged residue from the r16 rotation — must lead r17.
-        "v137_incremental_distinct_hll",
-        "v138_q2_min_cost_supplier",
-        "v139_q13_order_distribution",
-        "v140_q20_excess_shippers",
-        "v141_q19_disjunctive_revenue",
-        "v142_q15_top_supplier",
-        "v143_q16_supplier_count",
-        "v144_q11_important_parts",
-        "v145_q14_promo_share",
-        "v146_incremental_topk",
-        "v147_q4_priority_check",
-        "v148_q5_local_volume",
-        "v149_q6_forecast_revenue",
-        "v150_q9_product_profit",
-        "v151_q10_returned_items",
-        "v152_q12_ship_priority",
-        "v154_gapfill_locf",
-        "v155_interval_range_window",
-        "v156_width_bucket_histogram",
-        "v158_cohort_retention",
-        "v160_pagerank",
-        # (b) r14-aged refills (29 of 41; 12-query residue = R18_PINNED).
-        "v01_scan",
-        "v02_project_filter",
-        "v03_agg_q1",
-        "v04_join_agg",
-        "v05_q3_top10",
-        "v06_left_join_coalesce",
-        "v07_semi_anti",
-        "v08_theta_join",
-        "v09_rollup",
-        "v10_window_rank",
-        "v30_fingerprint",
-        "v34_range_join",
-        "v36_grouping_sets",
-        "v42_cube",
-        "v46_array_funcs",
-        "v47_null_conditional",
-        "v50_window_battery",
-        "v51_unpivot",
-        "v52_string_agg",
-        "v53_hash_split",
-        "v55_stratified_sample",
-        "v68_pii_scrub",
-        "v69_decontaminate",
-        "v73_stream_dedup",
-        "v76_stream_upsert",
-        "v78_paragraph_dedup",
-        "v85_salted_window",
-        "v86_salted_lag",
-        "v91_lateral_topk",
-    ]
-    # Runtime stays lenient (an import-time crash here would zero a whole
-    # driver round); tests/test_registry.py asserts the list is exact.
-    rest = sorted(k for k in QUERIES if k not in first)
-    order = [k for k in first if k in QUERIES] + rest
+def _order_by_number() -> None:
+    """Order the registry by query number (v01 ... v160) — the order the
+    driver and ``__spark_entry__.queries()`` see."""
     for mapping in (QUERIES, ORACLE):
-        snapshot = {k: mapping[k] for k in order if k in mapping}
+        items = sorted(
+            mapping.items(), key=lambda kv: int(kv[0][1:].split("_", 1)[0])
+        )
         mapping.clear()
-        mapping.update(snapshot)
+        mapping.update(items)
 
 
-_reorder()
+_order_by_number()

@@ -1,12 +1,4 @@
-"""V77+: relational additions registered after round 4.
-
-Lives apart from relational.py on purpose: the function-level change
-tracker (queries/_coverage.py) conservatively marks every unit of a
-module changed when its module-level residue changes, and relational.py
-holds 18 r4-verified queries — more than the driver window can absorb.
-New relational queries land here so existing verified code stays
-byte-identical.
-"""
+"""V77+: relational additions registered after round 4."""
 
 from __future__ import annotations
 

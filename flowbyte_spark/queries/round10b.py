@@ -1,7 +1,5 @@
-"""V116-V123: round-10 post-saturation additions (POST_WINDOW_NEW
-tier-3 contract — the 50-slot driver window refilled before these
-landed, so each carries a hash oracle plus the in-suite differential in
-tests/test_llm2_oracle.py and must lead the r11 window).
+"""V116-V123: round-10 additions, each with a hash oracle and an in-suite
+differential in tests/test_llm2_oracle.py.
 
 - V116 TPC-H Q22 shape (adapted to the fixture's customer columns —
   no c_phone, so nationkey stands in for the country code): an

@@ -355,11 +355,6 @@ def v127_prefix_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# POST-SATURATION additions (the r11 window refilled to exactly 50, so
-# v128-v131 carry the tier-3 contract: hash oracle + in-suite
-# differential in tests/test_llm2_oracle.py, and they must lead the r12
-# window — POST_WINDOW_NEW in queries/__init__.py).
-#
 # V128 — TPC-H Q17 shape: correlated scalar-AVG subquery (the
 # fractional-threshold class; v114 covers the MAX class).  Runs as
 # literal SQL so Catalyst decorrelates the per-part average into an

@@ -1,11 +1,19 @@
-"""Dry-run the driver's correctness sweep: first N window queries, in
-registry order, through __spark_entry__'s wrapped callables on ONE
-session (so cross-query session state — temp views, confs, lingering
-caches — is exercised exactly as the driver will), each compared
-against its DuckDB oracle at sf0.01 by sorted-column stringified row
-multisets (the driver's comparison).
+"""Dry-run the driver's correctness sweep: registered queries through
+__spark_entry__'s wrapped callables on ONE session (so cross-query
+session state — temp views, confs, lingering caches — is exercised
+exactly as the driver will), each compared against its DuckDB oracle at
+sf0.01 by sorted-column stringified row multisets (the driver's
+comparison).
 
-Usage: python scripts/driver_dryrun.py [N] [start]   (default N=50)
+Usage:
+    python scripts/driver_dryrun.py [N] [start]   first N in registry order
+                                                  (default N=50, start=0)
+    python scripts/driver_dryrun.py NAME [NAME ...]   the named queries
+
+The session is sized to the host: one task thread and one shuffle
+partition per CPU this process may run on, and half the physical memory
+as driver heap (local mode runs every task in the driver JVM; the other
+half is left to the Python workers, DuckDB and the OS).
 """
 
 from __future__ import annotations
@@ -21,20 +29,37 @@ if _REPO not in sys.path:
 SF = "/root/testdata/sf0.01"
 
 
+def _select(args: list[str], registered: list[str]) -> list[str]:
+    if all(a.isdigit() for a in args):
+        n = int(args[0]) if args else 50
+        start = int(args[1]) if len(args) > 1 else 0
+        return registered[start : start + n]
+    return args
+
+
+def _canon_rows(df) -> list[str]:
+    """Sorted stringified row multiset with NULLs canonicalized to None
+    first — so Spark's None and DuckDB's nan/NaT stringify identically
+    instead of producing a spurious VALUE MISMATCH (ADVICE r15)."""
+    import pandas as pd
+
+    df = df.astype(object).where(pd.notna(df), None)
+    return sorted(map(str, df.values.tolist()))
+
+
 def main() -> None:
     import duckdb
 
     from pyspark.sql import SparkSession
 
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 50
-    start = int(sys.argv[2]) if len(sys.argv) > 2 else 0
-
+    cpus = len(os.sched_getaffinity(0))
+    phys_gib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 30
     # Driver-owned session shape: plain builder, hostile timezone.
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.session.timeZone", "America/New_York")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", f"{max(1, phys_gib // 2)}g")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -43,7 +68,7 @@ def main() -> None:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    names = list(qs)[start : start + n]
+    names = _select(sys.argv[1:], list(qs))
 
     from flowbyte_spark.catalog import TABLES, table_path
 
@@ -57,6 +82,10 @@ def main() -> None:
     failures = []
     for i, name in enumerate(names):
         t0 = time.perf_counter()
+        if name not in qs:
+            failures.append((name, "not registered"))
+            print(f"[{i+1:2d}/{len(names)}] {name}: NOT REGISTERED")
+            continue
         try:
             sp = qs[name](spark, SF).toPandas()
         except Exception as exc:
@@ -74,15 +103,8 @@ def main() -> None:
                 )
                 status = "SCHEMA MISMATCH"
             else:
-                # NULL canonicalization before stringifying (ADVICE
-                # r15, same fix as dryrun_names._canon_rows): Spark
-                # None vs DuckDB nan/NaT must not read as a mismatch.
-                import pandas as pd
-
-                sp2 = sp2.astype(object).where(pd.notna(sp2), None)
-                du2 = du2.astype(object).where(pd.notna(du2), None)
-                a = sorted(map(str, sp2.values.tolist()))
-                b = sorted(map(str, du2.values.tolist()))
+                a = _canon_rows(sp2)
+                b = _canon_rows(du2)
                 if a == b:
                     status = "match"
                 else:

@@ -4,12 +4,10 @@ Runs v133 (dedup → stream-stream join → windowed agg, three chained
 stateful operators) twice — warm-up then timed, the bench.py
 convention — with ``run_available_now`` wrapped to dump each query's
 per-trigger recentProgress JSON.  The wrap lives HERE, not in
-``flowbyte_spark.streaming``: instrumentation in the shared runner
-would mark all 14 streaming queries in-round-changed (function-
-granular coverage policy, queries/_coverage.py) and force them into a
-driver window that freshness work already fills.  v133 resolves
-``run_available_now`` through a call-time import, so patching the
-module attribute reaches it without touching product code.
+``flowbyte_spark.streaming``, so the shared runner stays
+uninstrumented: v133 resolves ``run_available_now`` through a
+call-time import, so patching the module attribute reaches it without
+touching product code.
 
 BASELINE.md §Round-13 records the decomposition (per-trigger
 durationMs legs + stateOperators commit times) and the per-trigger

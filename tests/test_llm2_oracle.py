@@ -12,9 +12,6 @@ LLM2 = [
     "v80_exact_substrings",
     "v81_stream_stream_join",
     "v82_python_datasource",
-    # round-6 post-saturation additions (POST_WINDOW_NEW tier-3): the
-    # driver window refilled to exactly 50, so these carry the in-suite
-    # differential until they lead r7's window.
     "v88_variant_json",
     "v90_q21_waiting_suppliers",
     "v91_lateral_topk",
@@ -22,21 +19,13 @@ LLM2 = [
     "v93_xml_extract",
     "v94_salted_join",
     "v95_two_phase_agg",
-    # round-8 post-saturation additions (POST_WINDOW_NEW tier-3): the r8
-    # window refilled to exactly 50, so these carry the in-suite
-    # differential until they lead r9's window.
     "v97_jpeg_decode",
     "v98_wav_decode",
     "v99_y4m_decode",
     "v89_asof_forward",
     "v100_srp_neardup",
     "v101_url_dedup",
-    # round 9: SRP pairs composed into the CC cluster tier (in-window,
-    # driver-gated; listed here so the differential also runs in-suite).
     "v104_srp_cluster_dedup",
-    # round-10 post-saturation additions (POST_WINDOW_NEW tier-3): the
-    # r10 window refilled to exactly 50, so these carry the in-suite
-    # differential until they lead r11's window.
     "v116_q22_idle_customers",
     "v117_batched_ann",
     "v118_incremental_agg",
@@ -45,27 +34,17 @@ LLM2 = [
     "v121_bloom_filter_join",
     "v122_sparse_cosine_pairs",
     "v123_schema_evolution",
-    # round-11 registrations (in-window this round — listed here so the
-    # driver-identical differential also runs in-suite).
     "v124_incremental_minmax",
     "v125_stream_session_window",
     "v126_schema_widening",
     "v127_prefix_cosine_pairs",
-    # round-11 post-saturation additions (POST_WINDOW_NEW tier-3): the
-    # r11 window refilled to exactly 50, so these carry the in-suite
-    # differential until they lead r12's window.
     "v128_q17_small_quantity",
     "v129_doc_chunking",
     "v130_stream_full_outer_join",
     "v131_bucketed_agg",
     "v132_stream_join_window",
-    # round-12 registrations (in-window this round — listed here so the
-    # driver-identical differential also runs in-suite).
     "v133_stream_dedup_join_window",
     "v134_cbo_join_order",
-    # round-12 post-saturation additions (POST_WINDOW_NEW tier-3): the
-    # r12 window refilled to exactly 50, so these carry the in-suite
-    # differential until they lead r13's window.
     "v135_incremental_minmax_pruned",
     "v136_frequent_terms_sketch",
     "v137_incremental_distinct_hll",

@@ -1,143 +1,16 @@
-"""Recall gate for the product-quantization ANN path (round 6).
-
-v87's oracle hash-checks the fixture answer; this measures approximation
-quality on the same seeded clustered 10k-vector corpus the IVF gate uses.
-Two numbers: raw ADC recall@10 (the cheap scan — inherently lossy
-compression; 64 bits/vector at m=16) and the production two-stage
-pipeline (ADC shortlist -> exact re-rank), which must clear the same 0.9
-bar as IVF.  Measured (m=16, k-means codebooks, shortlist=100): raw
-0.48, re-ranked 0.96; shortlist=300 reaches 1.00.  Recorded in
-docs/SCALE.md.
-"""
+"""Codebook construction for the product-quantization ANN path (v87)."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
-from flowbyte_spark.operators.cache import release_persisted
-from flowbyte_spark.operators.similarity import (
-    cosine_topk,
-    pq_adc_topk,
-    pq_codebooks_kmeans,
-    pq_encode,
-    pq_topk_reranked,
-)
-
-N = 10_000
-DIM = 32
-M = 16  # 2-dim subspaces -> 64 bits/vector (m=8 measured: raw 0.24)
-CODES = 16
-N_CLUSTERS = 20
-K = 10
-SHORTLIST = 100
-N_QUERIES = 8
-
-
-@pytest.fixture(scope="module")
-def corpus(spark):
-    rng = np.random.default_rng(7)
-    centers = rng.normal(size=(N_CLUSTERS, DIM))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    which = rng.integers(0, N_CLUSTERS, size=N)
-    vecs = centers[which] + 0.15 * rng.normal(size=(N, DIM))
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id INT, emb ARRAY<DOUBLE>",
-    ).repartition(8)
-    df = df.persist()
-    df.count()
-    yield df
-    df.unpersist()
-
-
-def test_pq_recall_at_k(corpus):
-    # encode once, probe 8 queries — the amortized production pattern
-    cb = pq_codebooks_kmeans(
-        corpus, "vec_id", "emb", m=M, dim=DIM, codes=CODES, seed=42
-    )
-    encoded = pq_encode(corpus, "vec_id", "emb", cb, m=M, dim=DIM).persist()
-    encoded.count()
-
-    raw, reranked = [], []
-    for qid in range(0, N_QUERIES * 1250, 1250):
-        exact = {
-            r["id"]
-            for r in cosine_topk(corpus, "vec_id", "emb", qid, k=K).collect()
-        }
-        adc = {
-            r["id"]
-            for r in pq_adc_topk(
-                corpus, "vec_id", "emb", qid, k=K, m=M, dim=DIM,
-                codes=CODES, encoded=encoded, codebook=cb,
-            ).collect()
-        }
-        two_stage = {
-            r["id"]
-            for r in pq_topk_reranked(
-                corpus, "vec_id", "emb", qid, k=K, shortlist=SHORTLIST,
-                m=M, dim=DIM, codes=CODES, encoded=encoded, codebook=cb,
-            ).collect()
-        }
-        raw.append(len(exact & adc) / K)
-        reranked.append(len(exact & two_stage) / K)
-    encoded.unpersist()
-    release_persisted()
-
-    mean_raw = sum(raw) / len(raw)
-    mean_rr = sum(reranked) / len(reranked)
-    print(f"PQ recall@{K}: raw ADC {mean_raw:.3f}, reranked {mean_rr:.3f}")
-    # Documented gates (docs/SCALE.md): raw ADC at 32 bits/vector is the
-    # cheap filter; the two-stage pipeline must match IVF's 0.9 bar.
-    assert mean_raw >= 0.4, f"raw ADC recall collapsed: {raw}"
-    assert mean_rr >= 0.9, f"re-ranked recall@{K}={mean_rr:.3f} ({reranked})"
-
-
-def test_ivfpq_recall_at_k(corpus):
-    """The composed IVF-PQ structure must hold the same 0.9 bar: IVF
-    bounds the scan (nprobe of 16 lists), PQ ranks candidates from
-    codes, the shortlist re-ranks exactly."""
-    from flowbyte_spark.operators.similarity import ivfpq_build, ivfpq_topk
-
-    index = ivfpq_build(
-        corpus, "vec_id", "emb",
-        num_centroids=16, m=M, dim=DIM, codes=CODES,
-        centroid_mode="kmeans", seed=42,
-    )
-    index = (index[0], index[1].persist(), index[2], index[3].persist())
-    index[1].count(); index[3].count()
-
-    recalls = []
-    for qid in range(0, N_QUERIES * 1250, 1250):
-        exact = {
-            r["id"]
-            for r in cosine_topk(corpus, "vec_id", "emb", qid, k=K).collect()
-        }
-        approx = {
-            r["id"]
-            for r in ivfpq_topk(
-                corpus, "vec_id", "emb", qid, k=K,
-                num_centroids=16, nprobe=4, m=M, dim=DIM, codes=CODES,
-                shortlist=SHORTLIST, index=index,
-            ).collect()
-        }
-        recalls.append(len(exact & approx) / K)
-    index[1].unpersist(); index[3].unpersist()
-    release_persisted()
-    mean = sum(recalls) / len(recalls)
-    print(f"IVF-PQ recall@{K}: {mean:.3f}")
-    assert mean >= 0.9, f"recall@{K}={mean:.3f} ({recalls})"
+from flowbyte_spark.operators.similarity import pq_adc_topk, pq_codebooks
 
 
 def test_pq_codebook_handles_sparse_offset_ids(spark):
     """Round-6 review finding: ids starting above `codes` must still
     yield a full rank-coded codebook (the id<codes form silently built
     an EMPTY one and returned empty results)."""
-    import numpy as np
-
-    from flowbyte_spark.operators.similarity import pq_adc_topk, pq_codebooks
-
     rng = np.random.default_rng(3)
     vecs = rng.normal(size=(60, 16))
     df = spark.createDataFrame(

@@ -1,13 +1,10 @@
 """Oracle differentials for the registry residue (round 13).
 
-Round-13 audit: 24 registered queries had driver-row history and
-operator-level suites but NO in-suite Spark-vs-DuckDB differential, so
-between driver refreshes nothing in pytest re-ran the driver-identical
-comparison for them.  That gap matters most for the R14_PINNED set
-(v106-v108, v112-v115, v73, v76, v96 ...), which will not see a driver
-row again until round 14.  This file closes it: every name below runs
-the same sorted-column row-multiset comparison the driver applies, so
-EVERY registered query now has a per-pytest-run differential.
+Round-13 audit: 24 registered queries had operator-level suites but NO
+in-suite Spark-vs-DuckDB differential.  This file closes that gap:
+every name below runs the same sorted-column row-multiset comparison
+the driver applies, so EVERY registered query has a per-pytest-run
+differential (tests/test_registry.py checks that statically).
 """
 
 from __future__ import annotations

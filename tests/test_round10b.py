@@ -1,6 +1,5 @@
 """V116/V117 plan shapes + batched-ANN parity with the single-query
-probe.  (Oracle differentials live in test_llm2_oracle.py per the
-POST_WINDOW_NEW tier-3 contract.)"""
+probe.  (Oracle differentials live in test_llm2_oracle.py.)"""
 
 from __future__ import annotations
 

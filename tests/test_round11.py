@@ -1,6 +1,6 @@
 """Round-11 plan/shape assertions.  (Oracle differentials live in
-test_llm2_oracle.py per the POST_WINDOW_NEW tier-3 contract; property
-differentials for the minmax operator live in test_incremental.py.)"""
+test_llm2_oracle.py; property differentials for the minmax operator
+live in test_incremental.py.)"""
 
 from __future__ import annotations
 

@@ -1,4 +1,4 @@
-"""Tests for V41/V42 oracles and the GEMM similarity fast path."""
+"""Tests for V41/V42 oracles and the blocked-GEMM near-dup kernel."""
 
 from __future__ import annotations
 
@@ -6,10 +6,7 @@ import pytest
 
 from flowbyte_spark.catalog import load_table
 from flowbyte_spark.operators.similarity import (
-    cosine_topk,
-    cosine_topk_gemm,
     embedding_neardup_blocked,
-    embedding_neardup_gemm,
     embedding_neardup_pairs,
 )
 from tests.oracle_util import assert_query_matches
@@ -18,34 +15,6 @@ from tests.oracle_util import assert_query_matches
 @pytest.mark.parametrize("name", ["v41_session_window", "v42_cube"])
 def test_session_cube_matches_oracle(spark, sf_dir, name):
     assert_query_matches(spark, name, sf_dir)
-
-
-def test_gemm_topk_matches_catalyst_topk(spark):
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    exact = cosine_topk(emb, "vec_id", "embedding", 11, k=5).collect()
-    fast = cosine_topk_gemm(emb, "vec_id", "embedding", 11, k=5).collect()
-    assert [r.id for r in exact] == [r.id for r in fast]
-    for a, b in zip(exact, fast):
-        assert abs(a.sim - b.sim) <= 1e-4  # ulp-level associativity drift max
-
-
-def test_gemm_neardup_matches_catalyst_pairs(spark):
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    exact = {
-        (r.id_a, r.id_b): r.sim
-        for r in embedding_neardup_pairs(
-            emb, "vec_id", "embedding", threshold=0.45
-        ).collect()
-    }
-    fast = {
-        (r.id_a, r.id_b): r.sim
-        for r in embedding_neardup_gemm(
-            emb, "vec_id", "embedding", threshold=0.45
-        ).collect()
-    }
-    assert exact.keys() == fast.keys()
-    for k in exact:
-        assert abs(exact[k] - fast[k]) <= 1e-4
 
 
 @pytest.mark.parametrize("num_blocks", [1, 3, 8])
@@ -81,9 +50,3 @@ def test_blocked_gemm_no_driver_collect(spark):
     after = tracker.getJobIdsForGroup(None)
     assert len(after) == len(before), "plan construction ran Spark jobs"
     assert df.count() >= 0  # the plan itself executes fine
-
-
-def test_gemm_topk_unknown_query_raises(spark):
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    with pytest.raises(ValueError, match="not found"):
-        cosine_topk_gemm(emb, "vec_id", "embedding", 10**9, k=5)

@@ -5,9 +5,8 @@ sites in operators/similarity.py: one NULL embedding in an Arrow batch
 raised an opaque ValueError mid-stage (the class that kills a 12-hour
 100 TB job on one dirty row).  The fix is Catalyst-side ``isNotNull``
 entry filters — predicate semantics: a NULL embedding can never pair,
-match, or assign — plus a fail-loud contract for a NULL QUERY vector in
-the driver-side GEMM path and an empty result for a NULL query in the
-lazy Catalyst paths.
+match, or assign — plus an empty result for a NULL query vector in the
+top-k paths.
 
 Every entry point gets a pinned regression here: the dirty corpus (the
 fixture plus injected NULL rows) must produce EXACTLY the clean
@@ -24,9 +23,7 @@ from pyspark.sql import functions as F
 from flowbyte_spark.catalog import load_table
 from flowbyte_spark.operators.similarity import (
     cosine_topk,
-    cosine_topk_gemm,
     embedding_neardup_blocked,
-    embedding_neardup_gemm,
     embedding_neardup_pairs,
     ivf_assign,
     ivf_topk,
@@ -53,23 +50,6 @@ def _dirty(spark, limit: int | None = None):
         "vec_id BIGINT, embedding ARRAY<FLOAT>",
     )
     return emb.unionByName(nulls), emb
-
-
-def test_neardup_gemm_ignores_null_rows(spark):
-    dirty, clean = _dirty(spark, limit=80)
-    want = {
-        (r.id_a, r.id_b, r.sim)
-        for r in embedding_neardup_gemm(
-            clean, "vec_id", "embedding", threshold=0.3
-        ).collect()
-    }
-    got = {
-        (r.id_a, r.id_b, r.sim)
-        for r in embedding_neardup_gemm(
-            dirty, "vec_id", "embedding", threshold=0.3
-        ).collect()
-    }
-    assert got == want and want
 
 
 def test_neardup_blocked_ignores_null_rows(spark):
@@ -99,28 +79,8 @@ def test_neardup_blocked_ignores_null_rows(spark):
     assert twin == want
 
 
-def test_cosine_topk_gemm_ignores_null_rows(spark):
-    dirty, clean = _dirty(spark)
-    want = [(r.id, r.sim) for r in cosine_topk(
-        clean, "vec_id", "embedding", 11, k=5
-    ).collect()]
-    got = [(r.id, r.sim) for r in cosine_topk_gemm(
-        dirty, "vec_id", "embedding", 11, k=5
-    ).collect()]
-    assert [i for i, _ in got] == [i for i, _ in want]
-    for (_, a), (_, b) in zip(got, want):
-        assert abs(a - b) <= 1e-4
-
-
-def test_cosine_topk_gemm_null_query_fails_loud(spark):
-    dirty, _ = _dirty(spark)
-    with pytest.raises(ValueError, match="NULL embedding"):
-        cosine_topk_gemm(dirty, "vec_id", "embedding", 8003, k=5)
-
-
 def test_catalyst_topk_null_query_returns_empty(spark):
-    # The lazy paths cannot raise driver-side; their contract is the
-    # predicate one — a NULL query matches nothing.
+    # Predicate semantics: a NULL query matches nothing.
     dirty, _ = _dirty(spark)
     assert cosine_topk(dirty, "vec_id", "embedding", 8003, k=5).count() == 0
     assert ivf_topk(dirty, "vec_id", "embedding", 8003, k=5).count() == 0
