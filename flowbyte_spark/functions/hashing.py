@@ -2,9 +2,9 @@
 
 Dedup and fingerprint operators hash with ``md5`` (hex string) rather than
 Spark's native ``xxhash64`` so every operator has a bit-identical DuckDB
-oracle.  md5-as-min-hash is uniform enough for MinHash/fingerprint purposes;
-on a pure-Spark deployment ``xxhash64`` would be ~5x cheaper and the
-operators accept a ``hash_fn`` override for that.
+oracle.  The exception is LSH band keys (``dedup.minhash_lsh_pairs``): a
+key only tests slice equality, so 8-byte xxhash64 keys pick the same
+pairs as the oracles' md5 keys.
 
 Everything here returns Catalyst Columns (higher-order functions on
 arrays) — no Python executes per row.
@@ -66,20 +66,6 @@ def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
     return F.transform(
         seeds,
         lambda i: F.array_min(F.transform(shingles, lambda s: seeded_md5(i, s))),
-    )
-
-
-def lsh_band_hashes(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Collapse a MinHash signature into ``bands`` bucket keys:
-    band j = md5(join(signature[j*r : (j+1)*r])).  Docs sharing any band key
-    are near-dup candidates; banding turns the O(n²) pair search into a
-    shuffle on (band_index, band_hash) — the 100 TB path."""
-    band_idx = F.sequence(F.lit(0), F.lit(bands - 1))
-    return F.transform(
-        band_idx,
-        lambda j: F.md5(
-            F.array_join(F.slice(signature, j * rows_per_band + 1, rows_per_band), "")
-        ),
     )
 
 

@@ -6,10 +6,17 @@ dedup; its closest capability is keyed overwrite, sql.py:191-249):
 - exact row dedup            → hash shuffle on the subset columns
 - content-hash dedup         → sha2/md5 digest + first-wins window
 - n-gram Jaccard (exact)     → shingle explode + self-join on shingle
-- MinHash + LSH (approx)     → signature → band buckets → candidate join
+- MinHash / SimHash (approx) → signature → band keys → candidate join
+
+The banded candidate search is written once, in :func:`banded_pairs`
+(bucket self-join on (band, key) → distinct pairs → payload joined onto
+both sides → caller's score).  MinHash keys each band by the xxhash64 of
+its signature slice; SimHash here and SRP (``srp.py``) pack signatures
+into a long and go through :func:`hamming_pairs`, whose keys are bit
+slices and whose score is ``bit_count(pa XOR pb)``.
 
 Scale notes: exact Jaccard shuffles (doc, shingle) pairs — fine to ~10⁹
-shingles; past that, MinHash/LSH bounds the pair search to colliding
+shingles; past that, banding bounds the pair search to colliding
 buckets, which is the 100 TB path.  All expressions are Catalyst built-ins;
 nothing leaves the JVM.
 """
@@ -24,9 +31,8 @@ from pyspark.sql import functions as F
 from flowbyte_spark.functions import ensure_parallelism
 from flowbyte_spark.operators.cache import persist_tracked
 from flowbyte_spark.functions.hashing import (
-    lsh_band_hashes,
+    SIMHASH_BITS,
     seeded_md5,
-    simhash_bits,
     word_shingles,
     words,
 )
@@ -73,7 +79,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """All document pairs with word-n-gram Jaccard ≥ threshold (exact).
 
@@ -81,24 +86,6 @@ def ngram_jaccard_pairs(
     co-locates equal shingles) → per-pair intersection counts → Jaccard from
     set sizes.  Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard
     rounded to 4 d.p. for canonical comparison.
-
-    ``max_shingle_freq`` is the skew valve for scale (the SCALE.md row this
-    operator carries): a shingle appearing in d documents contributes
-    d·(d-1)/2 join rows, so corpus-common boilerplate shingles quadratically
-    dominate the self-join while carrying no similarity signal.  When set,
-    shingles with document frequency above the bound generate NO candidate
-    pairs; surviving candidates are then verified with EXACT Jaccard via
-    ``array_intersect`` on the full (unfiltered) shingle sets — reported
-    scores are identical to the exact path, and the only change is recall:
-    a pair sharing ONLY above-bound shingles is missed.  The recall
-    caveat that matters: a duplicate CLUSTER of d > bound documents
-    pushes its own shared shingles above the bound and blocks itself —
-    so run content-hash exact dedup first (exact clusters collapse to
-    one survivor) and set the bound above the expected near-dup cluster
-    size; what remains above it is genuine cross-document boilerplate,
-    which is exactly the join skew this valve exists to shed.  Same
-    candidates→exact-verify structure as :func:`minhash_lsh_pairs`, with
-    rare-shingle blocking in place of minhash banding.
     """
     sh = (
         ensure_parallelism(df)
@@ -115,36 +102,6 @@ def ngram_jaccard_pairs(
     exploded = sh.where(F.col("n_sh") > 0).select(
         "id", "n_sh", F.explode("sh").alias("g")
     )
-    if max_shingle_freq is not None:
-        rare = (
-            exploded.groupBy("g")
-            .agg(F.count(F.lit(1)).alias("df_g"))
-            .where(F.col("df_g") <= max_shingle_freq)
-            .select("g")
-        )
-        cand = exploded.join(rare, "g")
-        a, b = cand.alias("a"), cand.alias("b")
-        pairs = (
-            a.join(
-                b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id"))
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-        sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-        sb = sh.select(
-            F.col("id").alias("id_b"),
-            F.col("sh").alias("sh_b"),
-            F.col("n_sh").alias("n_b"),
-        )
-        verified = pairs.join(sa, "id_a").join(sb, "id_b")
-        inter_sz = F.size(F.array_intersect("sh_a", "sh_b"))
-        jac = inter_sz / (F.size("sh_a") + F.col("n_b") - inter_sz)
-        return (
-            verified.withColumn("jaccard", F.round(jac, 4))
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
     a, b = exploded.alias("a"), exploded.alias("b")
     inter = (
         a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
@@ -162,6 +119,67 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+
+
+def banded_pairs(sigs: DataFrame, payload: DataFrame, score: Column) -> DataFrame:
+    """Verified candidate pairs of a banded LSH search: the one bucket
+    self-join behind MinHash, SimHash and SRP near-dup.
+
+    ``sigs`` is ``(id, bands)`` with one key per band; two ids are a
+    candidate iff they share a key in the same band.  ``payload`` is
+    ``(id, p)`` and ``score`` is a column over ``pa``/``pb``, the two
+    candidates' payloads.  Returns ``(id_a, id_b, score)`` (``score``
+    keeps its alias) once per ``id_a < id_b`` candidate; the caller
+    applies its threshold.
+
+    Plan shape: ONE shuffle on (band, key) buckets — only colliding
+    buckets produce pairs, never the O(n²) cross join — then ``distinct``
+    (a pair sharing several bands is scored once) and the payload joined
+    onto each side.  Pass both frames persisted: each is read twice.
+    """
+    keys = sigs.select("id", F.posexplode("bands").alias("band", "key"))
+    a, b = keys.alias("a"), keys.alias("b")
+    candidates = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+    pa = payload.select(F.col("id").alias("id_a"), F.col("p").alias("pa"))
+    pb = payload.select(F.col("id").alias("id_b"), F.col("p").alias("pb"))
+    return candidates.join(pa, "id_a").join(pb, "id_b").select("id_a", "id_b", score)
+
+
+def hamming_pairs(
+    sigs: DataFrame, n_bits: int, bands: int, width: int, max_hamming: int
+) -> DataFrame:
+    """``(id_a, id_b, hamming)`` for signatures packed into one long,
+    ``sigs`` = ``(id, p)`` with the signature in the low ``n_bits`` bits.
+
+    Band j is bits ``[j*width, (j+1)*width)`` counted from the signature's
+    MSB (bit ``n_bits - 1``); bits below ``bands*width`` are in no band.
+    With ``max_hamming < bands`` the pigeonhole principle makes recall
+    perfect: two signatures that close agree on some band.  The distance
+    is ``bit_count(pa XOR pb)``, one codegen expression per candidate.
+    Pass ``sigs`` persisted.
+    """
+    mask = F.lit((1 << width) - 1)
+    keys = sigs.select(
+        "id",
+        F.array(
+            *[
+                F.shiftrightunsigned("p", n_bits - (j + 1) * width).bitwiseAND(mask)
+                for j in range(bands)
+            ]
+        ).alias("bands"),
+    )
+    dist = F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))).cast("long")
+    pairs = banded_pairs(keys, sigs, dist.alias("hamming"))
+    return pairs.where(F.col("hamming") <= max_hamming)
 
 
 def minhash_signatures(
@@ -217,8 +235,8 @@ def minhash_lsh_pairs(
 
     Three stages, all shuffle-bounded:
     1. signature: one pass, md5-family min-hashes over distinct shingles;
-    2. candidates: explode band keys, self-join on (band, hash) — only
-       colliding buckets produce pairs (never the O(n²) cross join);
+    2. candidates: :func:`banded_pairs` on ``bands`` keys, key j the
+       xxhash64 of signature slice j (``num_hashes // bands`` rows);
     3. verify: exact Jaccard on the candidates' shingle sets, filter.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b.  With b=8, r=4 the LSH
@@ -226,7 +244,7 @@ def minhash_lsh_pairs(
     0.59, so threshold=0.5 keeps verification honest (candidates below it
     are filtered by stage 3, not trusted from banding).
     """
-    rows_per_band = num_hashes // bands
+    r = num_hashes // bands
     # Split-frame shape (r17, guide §4.1/§2.3): the shingle sets and the
     # band keys serve DISJOINT consumers — verification joins need (id,
     # sh), the bucket self-join needs (id, bands) — so they live in two
@@ -251,43 +269,21 @@ def minhash_lsh_pairs(
         # and both verification legs.  Tracked for cache.release_persisted().
     )
     sh_df = persist_tracked(sh_df)
-    sigs = (
-        minhash_signatures(sh_df, "id", "sh", num_hashes)
-        .withColumn("bands", lsh_band_hashes(F.col("sig"), bands, rows_per_band))
-        .select("id", "bands")
-        # persisted so the bucket self-join's two sides scan the tiny
-        # (id, bands) table instead of re-running the signature aggregate.
-    )
-    sigs = persist_tracked(sigs)
-    buckets = sigs.select(
-        "id", F.posexplode("bands").alias("band_idx", "band_hash")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
+    # band j's key is the 8-byte xxhash64 of signature slice j: equal
+    # slices give equal keys, and the shuffle carries a long per row
+    sigs = persist_tracked(
+        minhash_signatures(sh_df, "id", "sh", num_hashes).select(
+            "id",
+            F.array(
+                *[F.xxhash64(F.slice("sig", j * r + 1, r)) for j in range(bands)]
+            ).alias("bands"),
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
     )
-    sets = sh_df.select("id", "sh")
-    verified = (
-        candidates.join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return verified.select("id_a", "id_b", "jaccard")
+    jaccard = F.round(
+        F.size(F.array_intersect("pa", "pb")) / F.size(F.array_union("pa", "pb")), 4
+    ).alias("jaccard")
+    pairs = banded_pairs(sigs, sh_df.withColumnRenamed("sh", "p"), jaccard)
+    return pairs.where(F.col("jaccard") >= threshold)
 
 
 def simhash_signatures(
@@ -357,73 +353,28 @@ def simhash_pairs(
     bucket join has perfect recall for the returned distance bound while
     avoiding the cross join.  Returns (id_a, id_b, hamming).
     """
-    from flowbyte_spark.functions.hashing import SIMHASH_BITS
-
-    slice_len = SIMHASH_BITS // bands
     tokens = (
         ensure_parallelism(df)
         .select(F.col(id_col).alias("id"), words(text_col).alias("w"))
         .where(F.size("w") > 0)
     )
-    base = (
-        simhash_signatures(tokens, "id", "w", SIMHASH_BITS)
-        .withColumn(
-            "bands",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda j: F.array_join(
-                    F.slice(F.col("bits"), j * slice_len + 1, slice_len), ""
-                ),
-            ),
-            # this transform IS a higher-order lambda, but it runs once per
-            # document over a 60-element array — not once per word per bit —
-            # so interpretation cost is noise
-        )
-        .withColumn(
-            # the signature packed into ONE long (60 bits fit a signed
-            # 64-bit lane), MSB-first so bit order matches the array; the
-            # fold is interpreted but runs once per DOCUMENT — verification
-            # below then runs per CANDIDATE, where it matters
-            "pk",
+    # The signature packed into ONE long (60 bits fit a signed 64-bit
+    # lane), MSB-first so band j is array slice j and bit_count(pa XOR pb)
+    # is the elementwise |a-b| sum (pinned in tests/test_llm_operators.py;
+    # at the r17 heavy tier this verify leg went 7.7 s -> 0.5 s over 24.5M
+    # candidates).  The fold is interpreted but runs once per DOCUMENT.
+    # Persisted: same InferFiltersFromGenerate trap as minhash_lsh_pairs,
+    # and hamming_pairs reads it three times; tracked for
+    # cache.release_persisted().
+    sigs = persist_tracked(
+        simhash_signatures(tokens, "id", "w", SIMHASH_BITS).select(
+            "id",
             F.aggregate(
                 F.col("bits"), F.lit(0).cast("long"), lambda acc, x: acc * 2 + x
-            ),
+            ).alias("p"),
         )
     )
-    # persist: same InferFiltersFromGenerate trap as minhash_lsh_pairs —
-    # cache the signatures once for all downstream branches; tracked for
-    # cache.release_persisted()
-    base = persist_tracked(base)
-    buckets = base.select("id", F.posexplode("bands").alias("band_idx", "band_val"))
-    a, b = buckets.alias("a"), buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    # Packed-long Hamming verification (r17, guide §2.3 narrower types +
-    # §4.1 builtins): per candidate the distance is
-    # bit_count(pk_a XOR pk_b) — one codegen expression — instead of the
-    # interpreted zip_with/aggregate lambda over two 60-element int
-    # arrays, and the verify joins ship an 8-byte long per side instead
-    # of the arrays.  Bit-exact: popcount of XOR over MSB-first-packed
-    # 0/1 arrays IS the elementwise |a-b| sum (candidate-set count +
-    # per-pair value checksum verified equal at the heavy tier, where
-    # this leg went 7.7 s -> 0.5 s over 24.5M candidates; equality also
-    # pinned in tests/test_llm_operators.py).
-    pks = base.select("id", "pk")
-    return (
-        candidates.join(pks.withColumnRenamed("id", "id_a").withColumnRenamed("pk", "pk_a"), "id_a")
-        .join(pks.withColumnRenamed("id", "id_b").withColumnRenamed("pk", "pk_b"), "id_b")
-        .withColumn("hamming", F.bit_count(F.col("pk_a").bitwiseXOR(F.col("pk_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return hamming_pairs(sigs, SIMHASH_BITS, bands, SIMHASH_BITS // bands, max_hamming)
 
 
 # ---------------------------------------------------------------------------

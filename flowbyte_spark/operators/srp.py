@@ -7,7 +7,9 @@ GEMM kernel is exact but broadcast-bound, the blocked variant pays
 O(n^2/blocks), IVF prunes by coarse clusters — SRP prunes by BANDED
 SIGNATURE BUCKETS like MinHash does for text, so candidate generation
 is a plain equi-join on (band, key): one shuffle, no pair blowup, no
-matrix broadcast.  The 100 TB shape.
+matrix broadcast.  The 100 TB shape.  That search is the one SimHash
+uses too (``dedup.hamming_pairs``); this module only computes the
+packed signatures.
 
 Everything is INTEGER-exact by construction: embeddings quantize to
 ``round(x * quant)`` longs and the hyperplanes are integers derived
@@ -85,13 +87,15 @@ def srp_neardup_pairs(
     only RECALL — a true near-pair missed by every band.  Miss
     probability at angle theta: ``(1 - (1 - theta/pi)^band_bits)^bands``.
 
-    Scale shape: signatures are one map-only pass (no shuffle); bands
-    explode to ``bands`` rows per vector; ONE shuffle on (band, key)
-    buckets candidates; the hamming filter joins signatures back by id
+    Scale shape: signatures are one map-only pass (no shuffle); the
+    candidate search and hamming filter are ``dedup.hamming_pairs``: ONE
+    shuffle on (band, key) buckets, then the signatures joined back by id
     (broadcast-or-shuffle, AQE's call).  Never all-pairs.
     """
     if n_planes % band_bits:
         raise ValueError("band_bits must divide n_planes")
+    if n_planes > 64:
+        raise ValueError("n_planes > 64 needs a multi-word mask (not built)")
     # array columns carry no width in the schema: probe one row for the
     # dimension (bounded limit(1) collect — NOTE this triggers a small
     # Spark job at PLAN-CONSTRUCTION time, before the caller acts on the
@@ -105,14 +109,12 @@ def srp_neardup_pairs(
         )
     dim = probe[0]["d"]
     planes = srp_planes(n_planes, dim, seed)
-    bands = n_planes // band_bits
 
-    if n_planes > 64:
-        raise ValueError("n_planes > 64 needs a multi-word mask (not built)")
     from flowbyte_spark.operators.cache import persist_tracked
+    from flowbyte_spark.operators.dedup import hamming_pairs
 
-    # Pack the sign bits into ONE long: band keys become nibble
-    # arithmetic and the pair distance becomes bit_count(xor) — all
+    # Pack the sign bits into ONE long (bit i = plane i): band keys
+    # become bit slices and the pair distance bit_count(xor) — all
     # whole-stage codegen, no per-pair higher-order lambdas.  The
     # signature plan feeds the banded self-join (twice) and both
     # distance joins — the tracked persist stops the n_planes x dim
@@ -163,53 +165,6 @@ def srp_neardup_pairs(
         return pd.Series((bits * pw).sum(axis=1).view(np.int64))
 
     sigs = persist_tracked(
-        df.select(
-            F.col(id_col).alias("__id__"),
-            _mask_kernel(F.col(vec_col)).alias("__m__"),
-        )
+        df.select(F.col(id_col).alias("id"), _mask_kernel(F.col(vec_col)).alias("p"))
     )
-    key_mask = (1 << band_bits) - 1
-    banded = sigs.select(
-        "__id__",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(
-                        F.col("__m__"), b * band_bits
-                    ).bitwiseAND(F.lit(key_mask))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__band__", "__key__"),
-    )
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.__band__") == F.col("b.__band__"))
-            & (F.col("a.__key__") == F.col("b.__key__"))
-            & (F.col("a.__id__") < F.col("b.__id__")),
-        )
-        .select(
-            F.col("a.__id__").alias("id_a"), F.col("b.__id__").alias("id_b")
-        )
-        .distinct()
-    )
-    return (
-        cand.join(
-            sigs.select(F.col("__id__").alias("id_a"), F.col("__m__").alias("__ma__")),
-            "id_a",
-        )
-        .join(
-            sigs.select(F.col("__id__").alias("id_b"), F.col("__m__").alias("__mb__")),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("__ma__").bitwiseXOR(F.col("__mb__")))
-            .cast("long")
-            .alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-    )
+    return hamming_pairs(sigs, n_planes, n_planes // band_bits, band_bits, max_hamming)

@@ -357,6 +357,54 @@ def test_packed_hamming_matches_array_form(spark):
     assert pairs.count() > 0
 
 
+def _packed_signatures(n_bits: int) -> list[tuple[int, int]]:
+    """200 signatures as signed longs: 40 random bases, each with five
+    variants a few bit flips away (near pairs sharing some bands)."""
+    import random
+
+    rng = random.Random(7)
+    out = []
+    for _ in range(40):
+        base = rng.getrandbits(n_bits)
+        for _ in range(5):
+            v = base
+            for bit in rng.sample(range(n_bits), rng.randint(0, 12)):
+                v ^= 1 << bit
+            out.append(v - (1 << 64) if v >> 63 else v)
+    return list(enumerate(out))
+
+
+def test_hamming_pairs_matches_bruteforce(spark):
+    """hamming_pairs == every pair with some equal MSB-first band and
+    popcount(xor) <= max, each pair once.  (60, 7, 8) leaves the low 4
+    bits in no band, so LSB-first bands would pick other pairs; the
+    64-bit signatures include values with bit 63 set."""
+    from flowbyte_spark.operators.dedup import hamming_pairs
+
+    max_hamming, u64 = 20, (1 << 64) - 1
+    for n_bits, bands, width in [(64, 16, 4), (60, 4, 15), (60, 7, 8)]:
+        sigs = _packed_signatures(n_bits)
+
+        def key(p, j):
+            return ((p & u64) >> (n_bits - (j + 1) * width)) & ((1 << width) - 1)
+
+        want = sorted(
+            (ia, ib, bin((pa ^ pb) & u64).count("1"))
+            for ia, pa in sigs
+            for ib, pb in sigs
+            if ia < ib
+            and bin((pa ^ pb) & u64).count("1") <= max_hamming
+            and any(key(pa, j) == key(pb, j) for j in range(bands))
+        )
+        df = spark.createDataFrame(sigs, "id long, p long")
+        got = sorted(
+            tuple(r)
+            for r in hamming_pairs(df, n_bits, bands, width, max_hamming).collect()
+        )
+        assert want and got == want, (n_bits, bands, width)
+        assert any(p < 0 for _, p in sigs) == (n_bits == 64)
+
+
 def test_simhash_signature_forms_agree(spark):
     """The codegen explode+agg signature path must equal the fold-form
     twin (hashing.simhash_bits) bit-for-bit on real corpus text."""
@@ -443,47 +491,6 @@ def test_sample_frames_contract(spark):
         fake_decode=True,
     )
     assert refeat.count() == 18
-
-
-def test_jaccard_shingle_freq_valve(spark):
-    """The skew valve must not change reported scores — only (documented)
-    recall of pairs held together solely by corpus-common shingles."""
-    docs = load_table(spark, SF, "documents")
-    exact = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).collect()
-    }
-    assert exact
-    # bound above any real doc frequency -> identical output
-    loose = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.5, max_shingle_freq=10**9
-        ).collect()
-    }
-    assert loose == exact
-    # bound above the fixture's near-dup cluster sizes: subset of the
-    # exact pairs, identical scores where kept, and every high-similarity
-    # pair (the near-dup replicas) survives
-    tight = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.5, max_shingle_freq=8
-        ).collect()
-    }
-    assert set(tight) <= set(exact)
-    assert all(exact[p] == v for p, v in tight.items())
-    high = {p for p, v in exact.items() if v >= 0.8}
-    assert high and high <= set(tight)
-    # the documented caveat is real: a bound BELOW a duplicate cluster's
-    # size blocks that cluster's own shared shingles and loses its pairs
-    starved = {
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.5, max_shingle_freq=3
-        ).collect()
-    }
-    assert not (high <= starved)
 
 
 def test_text_helpers_null_text_yields_null_not_sentinel(spark):

@@ -100,6 +100,21 @@ def test_band_bits_must_divide(spark):
         srp_neardup_pairs(emb, "vec_id", "embedding", n_planes=64, band_bits=5)
 
 
+def test_bad_n_planes_rejected_before_any_job(spark):
+    # n_planes is checked before the dimension probe: on an empty input
+    # the probe's early return would otherwise skip the check entirely
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = len(sc.statusTracker().getJobIdsForGroup(None))
+    for rows in ([], [(1, [1.0] * 4)]):
+        df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+        with pytest.raises(ValueError, match="n_planes > 64"):
+            srp_neardup_pairs(df, "vec_id", "embedding", n_planes=128, band_bits=4)
+    bus.waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(None)) == before
+
+
 def test_catalyst_signature_form_equals_arrow_kernel(spark):
     """srp_signature (pure-Catalyst reference form) and the operator's
     Arrow matmul kernel must produce identical sign bits — including the
