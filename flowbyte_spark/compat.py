@@ -360,9 +360,7 @@ class MSSQL(SQL):
         updates = source.read().select(
             *dict.fromkeys([*key_columns, *update_columns])
         )
-        from flowbyte_spark.operators.merge import update_by_keys
-
-        target.overwrite(update_by_keys(target.read(), updates, list(key_columns)))
+        target.update_by_keys(updates, list(key_columns))
         self._register_warehouse()
 
     def truncate_table(self, schema_name: str, table_name: str) -> None:
@@ -378,7 +376,9 @@ class MSSQL(SQL):
     def delete_data(self, schema_name: str, table_name: str) -> None:
         self._require_spark_mode("delete_data")
         try:
-            self._table(schema_name, table_name).delete()
+            # DELETE without a predicate (sql.py:307-317): same net state
+            # as a truncate on parquet
+            self._table(schema_name, table_name).truncate()
             self._register_warehouse()
             _log.success("Data deleted successfully!")
         except Exception as e:

@@ -108,20 +108,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def euclidean_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                _as_double_array(a),
-                _as_double_array(b),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def regex_literal(s: str) -> str:
     """Quote ``s`` so Java regex (``F.split``, ``rlike``) matches it
     literally — ``\\Q...\\E`` with embedded ``\\E`` split out, the same

@@ -4,8 +4,5 @@ as distributed Spark transforms.
 """
 
 from flowbyte_spark.operators.casts import apply_casts, normalize_decimals  # noqa: F401
-from flowbyte_spark.operators.merge import (  # noqa: F401
-    update_by_keys,
-    update_from_table,
-)
+from flowbyte_spark.operators.merge import update_by_keys  # noqa: F401
 from flowbyte_spark.operators.mutate import ParquetTable  # noqa: F401

@@ -5,7 +5,8 @@ Capability parity with the reference's update path
 
 - the reference executes one UPDATE statement *per record* with a commit per
   row (sql.py:233-245) — O(n) driver round-trips;
-- here both operators compile to ONE distributed plan: broadcast (or
+- here every keyed update (``compat.MSSQL.update_data`` and
+  ``update_from_table`` alike) compiles to ONE distributed plan: broadcast (or
   shuffle) the delta, left-join the target on the merge keys, and select
   ``when(present, new).otherwise(old)`` per updatable column.  Net state is
   identical — including explicit-NULL writes, which SQL SET performs and a
@@ -251,32 +252,6 @@ def update_by_keys(
         ]
     )
     return merged
-
-
-def update_from_table(
-    target: DataFrame,
-    source: DataFrame,
-    key_columns: Sequence[str],
-    *,
-    compat_skip_first_column: bool = True,
-) -> DataFrame:
-    """Join-update ``target`` from ``source`` on ``key_columns``.
-
-    Mirrors the reference's ``update_from_table`` (sql.py:253-289), which
-    generates a single ``UPDATE … FROM … JOIN``.  Quirk preserved: the
-    reference SETs *all source columns except the first*
-    (``df.columns[1:]``, sql.py:271).  ``compat_skip_first_column=True``
-    (default) reproduces that; pass False for the fixed native behavior
-    (update every non-key source column).
-    """
-    cols = list(source.columns)
-    if compat_skip_first_column and cols:
-        set_candidates = cols[1:]
-    else:
-        set_candidates = cols
-    set_cols = [c for c in set_candidates if c not in key_columns]
-    updates = source.select(*key_columns, *set_cols)
-    return update_by_keys(target, updates, key_columns)
 
 
 def scd2_apply(

@@ -1,9 +1,13 @@
-"""Mutable parquet tables: append / truncate / delete / overwrite / merge.
+"""Mutable parquet tables: append / overwrite / truncate / delete_where /
+update_by_keys.
 
 Capability parity with the reference's table-mutation surface
-(/root/reference/src/flowbyte/sql.py:174-188 insert, :292-302 truncate,
-:307-332 delete) on plain parquet storage — no transactional catalog
-required.
+(``flowbyte/sql.py``: 174-188 insert, 191-289 keyed and join updates,
+292-332 truncate and delete) on plain parquet storage — no
+transactional catalog required.  ``compat.MSSQL`` maps the reference's
+calls onto it: ``delete_data`` is :meth:`ParquetTable.truncate` and
+``update_from_table`` is :meth:`ParquetTable.update_by_keys` with a
+DataFrame source.
 
 The hard part (SURVEY.md §4.3.4) is that Spark cannot overwrite a path it
 is lazily reading from.  ``ParquetTable`` therefore uses a
@@ -26,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flowbyte_spark import catalog, log
-from flowbyte_spark.operators.merge import update_by_keys, update_from_table
+from flowbyte_spark.operators.merge import update_by_keys
 from flowbyte_spark.operators.table import Table
 
 
@@ -76,21 +80,14 @@ class ParquetTable(Table):
 
     # -- Tier A operators ----------------------------------------------------
 
-    def append(self, df: DataFrame, batchsize: int | None = None) -> None:
+    def append(self, df: DataFrame) -> None:
         """Append rows (reference: chunked insert, sql.py:174-188).
 
         The reference chunks to bound client memory; Spark writers are
-        already bounded per-partition, so ``batchsize`` only controls an
-        optional repartition (useful to cap output file count).
+        already bounded per partition, so there is no batch size.
         """
-        writer = df.write.mode("append")
-        if batchsize:
-            # Cap rows-per-file at the writer, not via repartition: the
-            # latter needs a df.count() job (an extra full pass) just to
-            # size the partition count.
-            writer = writer.option("maxRecordsPerFile", int(batchsize))
         known = catalog.cached_schema(self.path)
-        writer.parquet(self.path)
+        df.write.mode("append").parquet(self.path)
         # New files move the directory's identity, which retires the cached
         # schema.  It still holds when the appended frame reads back as the
         # same schema; otherwise inference decides on the next read.
@@ -99,15 +96,11 @@ class ParquetTable(Table):
         log.success(f"appended into {self.path}")
 
     def truncate(self) -> None:
-        """Remove all rows, keep the schema (reference: sql.py:292-302)."""
+        """Remove all rows, keep the schema (reference: TRUNCATE,
+        sql.py:292-302, and DELETE without a predicate, sql.py:307-317)."""
         empty = self.read().limit(0)
         self._swap_in(empty)
         log.success(f"truncated {self.path}")
-
-    def delete(self) -> None:
-        """Delete every row (reference: DELETE FROM without predicate,
-        sql.py:307-317) — same net state as truncate on parquet."""
-        self.truncate()
 
     def delete_where(self, condition: str) -> int:
         """Delete rows matching a SQL predicate string (reference:
@@ -138,24 +131,7 @@ class ParquetTable(Table):
         update_records: DataFrame | Sequence[Mapping],
         key_columns: Sequence[str],
     ) -> None:
-        """Keyed point-update, set-based (reference: sql.py:191-249)."""
+        """Keyed update, set-based (reference: per-record updates,
+        sql.py:191-249, and the join update, sql.py:253-289)."""
         self._swap_in(update_by_keys(self.read(), update_records, key_columns))
         log.success(f"updated {self.path} on keys {list(key_columns)}")
-
-    def update_from_table(
-        self,
-        source: DataFrame,
-        key_columns: Sequence[str],
-        *,
-        compat_skip_first_column: bool = True,
-    ) -> None:
-        """Join-update from another table (reference: sql.py:253-289)."""
-        self._swap_in(
-            update_from_table(
-                self.read(),
-                source,
-                key_columns,
-                compat_skip_first_column=compat_skip_first_column,
-            )
-        )
-        log.success(f"join-updated {self.path} on keys {list(key_columns)}")

@@ -2,8 +2,11 @@
 
 The reference mutates SQL Server tables in place (insert sql.py:174-188,
 update sql.py:191-289, truncate sql.py:292-302, delete sql.py:307-332).
-This engine offers the same mutation surface on two storage tiers behind
-one interface:
+This engine offers one mutation surface — read, append, overwrite,
+truncate, delete_where and update_by_keys — on two storage tiers behind
+one interface; ``compat.MSSQL`` is the reference-shaped facade over it
+(its ``delete_data`` is a truncate, its ``update_from_table`` an
+``update_by_keys`` with a DataFrame source):
 
 - :class:`flowbyte_spark.operators.mutate.ParquetTable` — directory-backed
   parquet with the write-temp-then-swap protocol.  Always available; the
@@ -15,7 +18,8 @@ one interface:
   keyed update rewrites only the files holding matched rows instead of the
   whole table, and concurrent readers keep a consistent snapshot.
 
-Both backends share one semantic core: update deltas are normalized by
+Both backends share one semantic core: every keyed update goes through
+``update_by_keys``, whose delta is normalized by
 :func:`flowbyte_spark.operators.merge.prepare_update_delta` (per-column
 last-record-wins, explicit-NULL writes, missing-key warnings), so a
 pipeline switching ParquetTable → CatalogTable changes commit mechanics,
@@ -60,16 +64,13 @@ class Table(abc.ABC):
     def exists(self) -> bool: ...
 
     @abc.abstractmethod
-    def append(self, df: DataFrame, batchsize: int | None = None) -> None: ...
+    def append(self, df: DataFrame) -> None: ...
 
     @abc.abstractmethod
     def overwrite(self, df: DataFrame) -> None: ...
 
     @abc.abstractmethod
     def truncate(self) -> None: ...
-
-    @abc.abstractmethod
-    def delete(self) -> None: ...
 
     @abc.abstractmethod
     def delete_where(self, condition: str) -> int: ...
@@ -79,15 +80,6 @@ class Table(abc.ABC):
         self,
         update_records: DataFrame | Sequence[Mapping],
         key_columns: Sequence[str],
-    ) -> None: ...
-
-    @abc.abstractmethod
-    def update_from_table(
-        self,
-        source: DataFrame,
-        key_columns: Sequence[str],
-        *,
-        compat_skip_first_column: bool = True,
     ) -> None: ...
 
 
@@ -194,11 +186,8 @@ class CatalogTable(Table):
 
     # -- write --------------------------------------------------------------
 
-    def append(self, df: DataFrame, batchsize: int | None = None) -> None:
-        writer = df.writeTo(self.identifier)
-        if batchsize:
-            writer = writer.option("maxRecordsPerFile", str(int(batchsize)))
-        writer.append()
+    def append(self, df: DataFrame) -> None:
+        df.writeTo(self.identifier).append()
         log.success(f"appended into {self.identifier}")
 
     def overwrite(self, df: DataFrame) -> None:
@@ -209,9 +198,6 @@ class CatalogTable(Table):
     def truncate(self) -> None:
         self.spark.sql(compile_delete(self.identifier, None))
         log.success(f"truncated {self.identifier}")
-
-    def delete(self) -> None:
-        self.truncate()
 
     def delete_where(self, condition: str) -> int:
         validate_predicate(self.spark, condition)
@@ -227,26 +213,6 @@ class CatalogTable(Table):
 
     # -- keyed updates ------------------------------------------------------
 
-    def _merge(self, delta: DataFrame, keys, set_cols, presence: bool) -> None:
-        # MERGE analysis requires a DETERMINISTIC source plan: the runtime
-        # row-group filter wraps the source in an EXISTS pushed onto the
-        # target scan, and the delta's last-record-wins ordering uses
-        # monotonically_increasing_id (non-deterministic by declaration).
-        # localCheckpoint materializes the computed rows and truncates the
-        # plan to them — the delta is one row per updated key, so this is
-        # a bounded write, the same size the join path broadcasts.
-        delta = delta.localCheckpoint(eager=True)
-        view = f"__fb_delta_{uuid.uuid4().hex[:12]}"
-        delta.createOrReplaceTempView(view)
-        try:
-            self.spark.sql(
-                compile_merge_update(
-                    self.identifier, view, keys, set_cols, presence
-                )
-            )
-        finally:
-            self.spark.catalog.dropTempView(view)
-
     def update_by_keys(
         self,
         update_records: DataFrame | Sequence[Mapping],
@@ -257,31 +223,24 @@ class CatalogTable(Table):
         )
         if delta is None:  # keys-only records: an UPDATE that sets nothing
             return
+        # MERGE analysis requires a DETERMINISTIC source plan: the runtime
+        # row-group filter wraps the source in an EXISTS pushed onto the
+        # target scan, and the delta's last-record-wins ordering uses
+        # monotonically_increasing_id (non-deterministic by declaration).
+        # localCheckpoint materializes the computed rows and truncates the
+        # plan to them — the delta is one row per updated key, so this is
+        # a bounded write, the same size the join path broadcasts.
         # prepare_update_delta guarantees one delta row per key, so the
         # MERGE can never hit the multiple-matches error.
-        self._merge(delta, keys, set_cols, presence=True)
+        delta = delta.localCheckpoint(eager=True)
+        view = f"__fb_delta_{uuid.uuid4().hex[:12]}"
+        delta.createOrReplaceTempView(view)
+        try:
+            self.spark.sql(
+                compile_merge_update(
+                    self.identifier, view, keys, set_cols, presence_flags=True
+                )
+            )
+        finally:
+            self.spark.catalog.dropTempView(view)
         log.success(f"updated {self.identifier} on keys {list(keys)}")
-
-    def update_from_table(
-        self,
-        source: DataFrame,
-        key_columns: Sequence[str],
-        *,
-        compat_skip_first_column: bool = True,
-    ) -> None:
-        cols = list(source.columns)
-        set_candidates = cols[1:] if (compat_skip_first_column and cols) else cols
-        set_cols = [c for c in set_candidates if c not in key_columns]
-        if not set_cols:
-            return
-        # DataFrame source: every column present in every row (SQL
-        # UPDATE…FROM semantics) — plain SET, no presence flags.  Dedup to
-        # one row per key matches update_by_keys' DataFrame-input path.
-        delta = (
-            source.select(*key_columns, *set_cols)
-            .withColumn("__seq__", F.monotonically_increasing_id())
-            .groupBy(*key_columns)
-            .agg(*[F.max_by(c, F.col("__seq__")).alias(c) for c in set_cols])
-        )
-        self._merge(delta, list(key_columns), set_cols, presence=False)
-        log.success(f"join-updated {self.identifier} on keys {list(key_columns)}")

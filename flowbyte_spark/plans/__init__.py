@@ -26,10 +26,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df)
 
 
-def uses_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in physical_plan(df)
-
-
 def uses_nested_loop_join(df: DataFrame) -> bool:
     return "BroadcastNestedLoopJoin" in physical_plan(df) or (
         "CartesianProduct" in physical_plan(df)
@@ -63,19 +59,6 @@ def read_schema_columns(df: DataFrame) -> list[str]:
                 if name:
                     cols.append(name)
     return cols
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    """Number of WholeStageCodegen regions — wider/fewer is better."""
-    plan = physical_plan(df)
-    ids = set()
-    for line in plan.splitlines():
-        if "WholeStageCodegen" in line:
-            tail = line.split("WholeStageCodegen", 1)[1]
-            digits = "".join(ch for ch in tail if ch.isdigit())
-            if digits:
-                ids.add(int(digits))
-    return len(ids)
 
 
 def shuffle_exchanges(df: DataFrame) -> int:

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from flowbyte_spark.catalog import load_table, register_tables
 from flowbyte_spark.operators.asof import asof_join, range_join
+from flowbyte_spark.operators.casts import normalize_decimals
 from flowbyte_spark.queries import register
 
 RANGE_SECONDS = 600  # 10 minutes
@@ -136,7 +137,7 @@ def v35_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# V36 — GROUPING SETS through the SQL facade (spark.sql pass-through path)
+# V36 — GROUPING SETS through the spark.sql pass-through path
 # ---------------------------------------------------------------------------
 _V36_SQL_SPARK = """
     SELECT c_mktsegment, o_orderpriority,
@@ -154,14 +155,11 @@ _V36_SQL_SPARK = """
 )
 def v36_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exercises the reference's pass-through pattern end to end: tables
-    registered in the session catalog, raw SQL through the facade
-    (sql.py:88-171 -> SparkSQLSource.get_data), Catalyst as the attached
-    engine."""
-    from flowbyte_spark.sources.sql_source import SparkSQLSource
-
+    registered in the session catalog, raw SQL run by Catalyst as the
+    attached engine, then the decimal policy (what ``compat.MSSQL.get_data``
+    does in spark mode, sql.py:88-171, minus the pandas collect)."""
     register_tables(spark, sf_dir)
-    src = SparkSQLSource(spark).connect()
-    df = src.get_data(_V36_SQL_SPARK)
+    df = normalize_decimals(spark.sql(_V36_SQL_SPARK))
     return df.orderBy("g_seg", "g_prio", "c_mktsegment", "o_orderpriority")
 
 

@@ -120,6 +120,11 @@ def test_insert_update_delete_lifecycle(conn):
     conn.truncate_table("dbo", "nation")
     assert len(conn.get_data("SELECT * FROM nation")) == 0
 
+    columns = list(conn.get_data("SELECT * FROM customer").columns)
+    conn.delete_data("dbo", "customer")
+    pdf = conn.get_data("SELECT * FROM customer")
+    assert len(pdf) == 0 and list(pdf.columns) == columns
+
 
 def test_update_data_rejects_non_dicts(conn):
     with pytest.raises(TypeError):

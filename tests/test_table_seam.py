@@ -174,11 +174,12 @@ def test_catalog_table_merge_end_to_end(spark):
 
 def test_catalog_table_merge_inserts_missing_keys(spark):
     t = _mem_table(spark, [(1, "a", 1.0)], "k INT, s STRING, v DOUBLE")
-    # update_from_table merges a DataFrame source (plain SET, no flags)
+    # a DataFrame source: every presence flag is true, so each SET takes
+    # the source value; seq is not a target column and is ignored
     src = t.read().sparkSession.createDataFrame(
         [(9, 1, "z", 5.0)], "seq INT, k INT, s STRING, v DOUBLE"
     )
-    t.update_from_table(src, ["k"])
+    t.update_by_keys(src, ["k"])
     rows = {r["k"]: r for r in t.read().collect()}
     assert rows[1]["s"] == "z" and rows[1]["v"] == 5.0
 

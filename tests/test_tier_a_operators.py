@@ -15,7 +15,7 @@ from pyspark.sql.types import (
 )
 
 from flowbyte_spark.operators.casts import apply_casts, normalize_decimals
-from flowbyte_spark.operators.merge import update_by_keys, update_from_table
+from flowbyte_spark.operators.merge import update_by_keys
 from flowbyte_spark.operators.mutate import ParquetTable
 
 SCHEMA = StructType(
@@ -81,24 +81,9 @@ def test_update_by_keys_rejects_non_dicts(spark, target):
         update_by_keys(target, [("id", 1)], ["id"])
 
 
-def test_update_from_table_skips_first_column_quirk(spark, target):
-    # reference SETs df.columns[1:] (sql.py:271): first source column is
-    # never written even when it is a data column
-    source = spark.createDataFrame(
-        [("IGNORED", 1, 111.0)],
-        StructType(
-            [
-                StructField("name", StringType()),
-                StructField("id", LongType()),
-                StructField("bal", DoubleType()),
-            ]
-        ),
-    )
-    merged = update_from_table(target, source, ["id"])
-    assert rows(merged) == [(1, "a", 111.0), (2, "b", 20.0), (3, "c", 30.0)]
-
-
-def test_update_from_table_native_mode_updates_all(spark, target):
+def test_update_by_keys_dataframe_updates_all(spark, target):
+    # a DataFrame source sets every non-key column it carries (the
+    # reference's columns[1:] quirk lives in compat.MSSQL.update_from_table)
     source = spark.createDataFrame(
         [("ZZZ", 1, 111.0)],
         StructType(
@@ -109,9 +94,7 @@ def test_update_from_table_native_mode_updates_all(spark, target):
             ]
         ),
     )
-    merged = update_from_table(
-        target, source, ["id"], compat_skip_first_column=False
-    )
+    merged = update_by_keys(target, source, ["id"])
     assert rows(merged) == [(1, "ZZZ", 111.0), (2, "b", 20.0), (3, "c", 30.0)]
 
 
@@ -204,8 +187,8 @@ CACHE_OPS = {
     "update_by_keys": lambda spark, t: t.update_by_keys(
         [{"id": 2, "name": None}, {"id": 3, "bal": 3.5}], ["id"]
     ),
-    "update_from_table": lambda spark, t: t.update_from_table(
-        spark.createDataFrame([("skip", 1, 1.5)], "name STRING, id LONG, bal DOUBLE"),
+    "update_by_keys_dataframe": lambda spark, t: t.update_by_keys(
+        spark.createDataFrame([("one", 1, 1.5)], "name STRING, id LONG, bal DOUBLE"),
         ["id"],
     ),
     # outside code rewriting the table, or adding a file to it
@@ -272,6 +255,27 @@ def test_insert_into_existing_table_launches_only_its_write(spark, target, tmp_p
     rows_in = pd.DataFrame({"id": [4], "name": ["d"], "bal": [40.0]})
     assert _jobs_launched(spark, lambda: db.insert_data("dbo", "t", rows_in)) == 1
     assert db.get_data("SELECT count(*) AS n FROM t")["n"][0] == 4
+
+
+def test_update_from_table_launches_three_jobs(spark, target, tmp_path):
+    # one keyed merge through ParquetTable.update_by_keys is three jobs; a
+    # route that re-reads or re-plans the target would launch more
+    import pandas as pd
+
+    from flowbyte_spark.compat import MSSQL
+
+    db_dir = tmp_path / "wh" / "db"
+    ParquetTable(spark, str(db_dir / "dbo.t")).overwrite(target)
+    ParquetTable(spark, str(db_dir / "dbo.s")).overwrite(
+        spark.createDataFrame([(2, "B", 22.0)], SCHEMA)
+    )
+    db = MSSQL("spark", str(tmp_path / "wh"), "db", "u", "p", None)
+    db.connect()
+    df = pd.DataFrame(columns=["name", "bal"])  # SETs columns[1:]: bal only
+    n = _jobs_launched(spark, lambda: db.update_from_table(df, "t", "s", ["id"]))
+    assert n == 3
+    got = db.get_data("SELECT id, name, bal FROM t ORDER BY id")
+    assert got.values.tolist() == [[1, "a", 10.0], [2, "b", 22.0], [3, "c", 30.0]]
 
 
 # ---------------------------------------------------------------------------
