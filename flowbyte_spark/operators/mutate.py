@@ -133,5 +133,9 @@ class ParquetTable(Table):
     ) -> None:
         """Keyed update, set-based (reference: per-record updates,
         sql.py:191-249, and the join update, sql.py:253-289)."""
-        self._swap_in(update_by_keys(self.read(), update_records, key_columns))
+        current = self.read()
+        merged = update_by_keys(current, update_records, key_columns)
+        if merged is current:  # keys-only records: an UPDATE that sets nothing
+            return
+        self._swap_in(merged)
         log.success(f"updated {self.path} on keys {list(key_columns)}")

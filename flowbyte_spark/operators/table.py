@@ -114,15 +114,14 @@ def compile_merge_update(
     source_view: str,
     keys: Sequence[str],
     set_cols: Sequence[str],
-    presence_flags: bool,
 ) -> str:
     """``MERGE INTO`` carrying only WHEN MATCHED UPDATE (never INSERT —
     the reference's update_data is an UPDATE, sql.py:191-249).
 
-    With ``presence_flags`` the delta has ``__has_<c>__`` markers and each
-    SET compiles to ``CASE WHEN src.__has_c__ THEN src.c ELSE tgt.c END``
-    so a record that omits a column leaves it untouched while an explicit
-    NULL overwrites — identical to the join path in operators/merge.py.
+    The delta has ``__has_<c>__`` markers and each SET compiles to
+    ``CASE WHEN src.__has_c__ THEN src.c ELSE tgt.c END`` so a record that
+    omits a column leaves it untouched while an explicit NULL overwrites —
+    identical to the join path in operators/merge.py.
     """
     tgt, src = quote_table(identifier), quote_ident(source_view)
     on = " AND ".join(
@@ -130,14 +129,8 @@ def compile_merge_update(
     )
     sets = []
     for c in set_cols:
-        qc = quote_ident(c)
-        if presence_flags:
-            qh = quote_ident(_has(c))
-            sets.append(
-                f"t.{qc} = CASE WHEN s.{qh} THEN s.{qc} ELSE t.{qc} END"
-            )
-        else:
-            sets.append(f"t.{qc} = s.{qc}")
+        qc, qh = quote_ident(c), quote_ident(_has(c))
+        sets.append(f"t.{qc} = CASE WHEN s.{qh} THEN s.{qc} ELSE t.{qc} END")
     return (
         f"MERGE INTO {tgt} AS t USING {src} AS s ON {on} "
         f"WHEN MATCHED THEN UPDATE SET " + ", ".join(sets)
@@ -237,9 +230,7 @@ class CatalogTable(Table):
         delta.createOrReplaceTempView(view)
         try:
             self.spark.sql(
-                compile_merge_update(
-                    self.identifier, view, keys, set_cols, presence_flags=True
-                )
+                compile_merge_update(self.identifier, view, keys, set_cols)
             )
         finally:
             self.spark.catalog.dropTempView(view)

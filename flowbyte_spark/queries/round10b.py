@@ -227,22 +227,14 @@ def v118_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v119_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from flowbyte_spark.queries.streaming_q import _memo_source, _scratch_dir
-    from flowbyte_spark.streaming import (
-        foreach_batch_sink,
-        read_event_stream,
-        run_available_now,
-        scoped_sql_conf,
-        stream_stream_outer_join,
+    from flowbyte_spark.queries.streaming_q import (
+        _drain_to_parquet,
+        _memo_source,
+        _write_events_then_sentinels,
     )
+    from flowbyte_spark.streaming import read_event_stream, stream_stream_outer_join
 
     def build(path: str) -> None:
-        from flowbyte_spark.queries.streaming_q import (
-            _write_events_then_sentinels,
-        )
-
         events = load_table(spark, sf_dir, "events")
         cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
         sentinels = spark.createDataFrame(
@@ -256,7 +248,6 @@ def v119_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         _write_events_then_sentinels(path, events, sentinels, cols)
 
     src = _memo_source("v119_events", sf_dir, build)
-    ckpt = _scratch_dir("v119_ckpt")
     views = read_event_stream(spark, src, max_files_per_trigger=1).where(
         F.col("event_type") == "view"
     )
@@ -270,20 +261,8 @@ def v119_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("click_id"),
         F.col("l.user_id").alias("user_id"),
     )
-
-    out = _scratch_dir("v119_result")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    writer = foreach_batch_sink(
-        joined, write, checkpoint=ckpt, output_mode="append"
-    )
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-    shutil.rmtree(ckpt, ignore_errors=True)
     return (
-        spark.read.parquet(out)
+        _drain_to_parquet(joined, "v119", "append")
         .where(F.col("view_id") >= 0)
         .orderBy("view_id", "click_id")
     )

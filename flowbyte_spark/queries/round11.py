@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -140,14 +139,8 @@ def v124_incremental_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v125_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flowbyte_spark.queries.streaming_q import _memo_source, _scratch_dir
-    from flowbyte_spark.streaming import (
-        foreach_batch_sink,
-        read_event_stream,
-        run_available_now,
-        scoped_sql_conf,
-        session_window_agg,
-    )
+    from flowbyte_spark.queries.streaming_q import _drain_to_parquet, _memo_source
+    from flowbyte_spark.streaming import read_event_stream, session_window_agg
 
     def build(path: str) -> None:
         events = load_table(spark, sf_dir, "events")
@@ -175,24 +168,12 @@ def v125_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                     pinned.add(f)
 
     src = _memo_source("v125_events", sf_dir, build)
-    ckpt = _scratch_dir("v125_ckpt")
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     agg = session_window_agg(
         stream, gap=f"{SESSION_GAP_MIN} minutes", watermark="3650 days"
     )
-    out = _scratch_dir("v125_result")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    writer = foreach_batch_sink(
-        agg, write, checkpoint=ckpt, output_mode="append"
-    )
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-    shutil.rmtree(ckpt, ignore_errors=True)
     return (
-        spark.read.parquet(out)
+        _drain_to_parquet(agg, "v125", "append")
         .where(F.col("user_id") >= 0)
         .orderBy("user_id", "session_start")
     )
@@ -480,20 +461,14 @@ def v129_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v130_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flowbyte_spark.queries.streaming_q import _memo_source, _scratch_dir
-    from flowbyte_spark.streaming import (
-        foreach_batch_sink,
-        read_event_stream,
-        run_available_now,
-        scoped_sql_conf,
-        stream_stream_outer_join,
+    from flowbyte_spark.queries.streaming_q import (
+        _drain_to_parquet,
+        _memo_source,
+        _write_events_then_sentinels,
     )
+    from flowbyte_spark.streaming import read_event_stream, stream_stream_outer_join
 
     def build(path: str) -> None:
-        from flowbyte_spark.queries.streaming_q import (
-            _write_events_then_sentinels,
-        )
-
         events = load_table(spark, sf_dir, "events")
         cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
         sentinels = spark.createDataFrame(
@@ -507,7 +482,6 @@ def v130_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         _write_events_then_sentinels(path, events, sentinels, cols)
 
     src = _memo_source("v130_events", sf_dir, build)
-    ckpt = _scratch_dir("v130_ckpt")
     views = read_event_stream(spark, src, max_files_per_trigger=1).where(
         F.col("event_type") == "view"
     )
@@ -521,19 +495,8 @@ def v130_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("click_id"),
         F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias("user_id"),
     )
-    out = _scratch_dir("v130_result")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    writer = foreach_batch_sink(
-        joined, write, checkpoint=ckpt, output_mode="append"
-    )
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-    shutil.rmtree(ckpt, ignore_errors=True)
     return (
-        spark.read.parquet(out)
+        _drain_to_parquet(joined, "v130", "append")
         .where(
             (F.col("view_id").isNull() | (F.col("view_id") >= 0))
             & (F.col("click_id").isNull() | (F.col("click_id") >= 0))
@@ -612,16 +575,11 @@ def v131_bucketed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def v132_stream_join_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flowbyte_spark.queries.streaming_q import (
+        _drain_to_parquet,
         _memo_source,
-        _scratch_dir,
         _write_events_then_sentinels,
     )
-    from flowbyte_spark.streaming import (
-        foreach_batch_sink,
-        read_event_stream,
-        run_available_now,
-        scoped_sql_conf,
-    )
+    from flowbyte_spark.streaming import read_event_stream, stream_stream_join
 
     def build(path: str) -> None:
         events = load_table(spark, sf_dir, "events")
@@ -643,23 +601,11 @@ def v132_stream_join_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = _memo_source("v132_events", sf_dir, build)
-    ckpt = _scratch_dir("v132_ckpt")
-    views = (
-        read_event_stream(spark, src, max_files_per_trigger=1)
-        .where(F.col("event_type") == "view")
-        .withWatermark("ts", "3650 days")
-        .alias("l")
+    views = read_event_stream(spark, src, max_files_per_trigger=1).where(
+        F.col("event_type") == "view"
     )
-    clicks = (
-        read_event_stream(spark, src, max_files_per_trigger=1)
-        .where(F.col("event_type") == "click")
-        .withWatermark("ts", "3650 days")
-        .alias("r")
-    )
-    cond = (
-        (F.col("l.user_id") == F.col("r.user_id"))
-        & (F.col("r.ts") >= F.col("l.ts"))
-        & (F.col("r.ts") <= F.col("l.ts") + F.expr("INTERVAL 30 minutes"))
+    clicks = read_event_stream(spark, src, max_files_per_trigger=1).where(
+        F.col("event_type") == "click"
     )
     # The sentinel rows join nothing (disjoint negative user ids per
     # side), so no sentinel guard is needed after the INNER join — and
@@ -669,7 +615,9 @@ def v132_stream_join_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sees ts=2100, and the global watermark (min across nodes) stays
     # behind every window forever — zero rows ever emit (root-caused
     # r11 with per-source progress offsets).
-    joined = views.join(clicks, cond, "inner")
+    joined = stream_stream_join(
+        views, clicks, "user_id", max_delay="30 minutes", watermark="3650 days"
+    )
     agg = (
         joined.groupBy(F.window(F.col("l.ts"), "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
@@ -678,15 +626,4 @@ def v132_stream_join_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pairs",
         )
     )
-    out = _scratch_dir("v132_result")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    writer = foreach_batch_sink(
-        agg, write, checkpoint=ckpt, output_mode="append"
-    )
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out).orderBy("hour_ts")
+    return _drain_to_parquet(agg, "v132", "append").orderBy("hour_ts")

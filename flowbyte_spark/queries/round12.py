@@ -17,8 +17,6 @@
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from flowbyte_spark.catalog import load_table
@@ -28,7 +26,7 @@ from flowbyte_spark.queries import register
 # ---------------------------------------------------------------------------
 # V133 — dedup → stream-stream join → windowed agg, one streaming query.
 # The v132 skeleton (two file-stream readers over one directory, two
-# trailing sentinel files, sentinel filtering at the SINK only) with a
+# trailing sentinel files, sentinel filtering on the read-back only) with a
 # dropDuplicatesWithinWatermark stage ahead of each join input.  The
 # source holds every event whose event_id is divisible by 10 TWICE; the
 # oracle is the clean batch join→window twin, so a dedup miss (doubled
@@ -50,16 +48,11 @@ from flowbyte_spark.queries import register
 )
 def v133_stream_dedup_join_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flowbyte_spark.queries.streaming_q import (
+        _drain_to_parquet,
         _memo_source,
-        _scratch_dir,
         _write_events_then_sentinels,
     )
-    from flowbyte_spark.streaming import (
-        foreach_batch_sink,
-        read_event_stream,
-        run_available_now,
-        scoped_sql_conf,
-    )
+    from flowbyte_spark.streaming import read_event_stream
 
     def build(path: str) -> None:
         events = load_table(spark, sf_dir, "events")
@@ -83,7 +76,6 @@ def v133_stream_dedup_join_window(spark: SparkSession, sf_dir: str) -> DataFrame
         )
 
     src = _memo_source("v133_events", sf_dir, build)
-    ckpt = _scratch_dir("v133_ckpt")
 
     def deduped_side(event_type: str, alias: str) -> DataFrame:
         # Watermark FIRST (dropDuplicatesWithinWatermark requires one),
@@ -111,7 +103,7 @@ def v133_stream_dedup_join_window(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # No sentinel guard in-plan (v132 landmine): sentinels join nothing
     # (disjoint negative user ids) and windows on ts=2100 never emit
-    # inside the run, so the sink filter below is belt-and-braces.
+    # inside the run, so the read-back filter below is belt-and-braces.
     joined = views.join(clicks, cond, "inner")
     agg = (
         joined.groupBy(F.window(F.col("l.ts"), "1 hour").alias("w"))
@@ -121,20 +113,11 @@ def v133_stream_dedup_join_window(spark: SparkSession, sf_dir: str) -> DataFrame
             "n_pairs",
         )
     )
-    out = _scratch_dir("v133_result")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.where(F.col("hour_ts") < "2099-01-01").write.mode(
-            "append"
-        ).parquet(out)
-
-    writer = foreach_batch_sink(
-        agg, write, checkpoint=ckpt, output_mode="append"
+    return (
+        _drain_to_parquet(agg, "v133", "append")
+        .where(F.col("hour_ts") < "2099-01-01")
+        .orderBy("hour_ts")
     )
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out).orderBy("hour_ts")
 
 
 # ---------------------------------------------------------------------------

@@ -699,18 +699,9 @@ _V159_K = 5
     """,
 )
 def v159_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from flowbyte_spark.queries.streaming_q import (
-        _memo_source,
-        _scratch_dir,
-    )
-    from flowbyte_spark.streaming import (
-        foreach_batch_sink,
-        read_event_stream,
-        run_available_now,
-        scoped_sql_conf,
-    )
+    from flowbyte_spark.operators.topk import top_k_per_group
+    from flowbyte_spark.queries.streaming_q import _drain_to_parquet, _memo_source
+    from flowbyte_spark.streaming import read_event_stream
     from flowbyte_spark.streaming.stateful import running_topk
 
     src = _memo_source(
@@ -720,30 +711,12 @@ def v159_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(3)
         .write.parquet(p),
     )
-    ckpt = _scratch_dir("v159_ckpt")
-    out = _scratch_dir("v159_result")
-
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     topk = running_topk(
         stream, k=_V159_K, watermark="3650 days", max_keys=None
     )
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out)
-
-    writer = foreach_batch_sink(
-        topk, write, checkpoint=ckpt, output_mode="update"
-    )
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-    from flowbyte_spark.operators.topk import top_k_per_group
-
     latest = top_k_per_group(
-        spark.read.parquet(out),
+        _drain_to_parquet(topk, "v159", "update"),
         ["event_type"],
         [F.col("batch_id").desc()],
         k=1,

@@ -15,16 +15,12 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from flowbyte_spark.catalog import load_table
 from flowbyte_spark.queries import register
 from flowbyte_spark.queries.tier_a import _scratch_dir
-from flowbyte_spark.streaming import (
-    foreach_batch_sink,
-    read_event_stream,
-    run_available_now,
-    tumbling_window_agg,
-)
+from flowbyte_spark.streaming import read_event_stream, tumbling_window_agg
 
 # Stream-SOURCE directories memoized per (variant, sf_dir) for the
 # session.  The scratch source is harness scaffolding — the nanos-typed
@@ -90,6 +86,62 @@ def _write_events_then_sentinels(
             os.utime(f, (stamp, stamp))
 
 
+def _drain(stream: DataFrame, name: str, output_mode: str, write) -> None:
+    """Run ``stream`` over everything available through the foreachBatch
+    function ``write``, on a fresh scratch checkpoint that is deleted
+    afterwards, also when the run fails.
+
+    State width: a stream's state-store partition count freezes from
+    ``spark.sql.shuffle.partitions`` when its fresh checkpoint is
+    initialized.  These queries hold a few dozen live keys or windows
+    (~25 hourly windows inside v60's 1 h watermark horizon), so the run
+    is scoped to 4 state partitions — see scoped_sql_conf's docstring
+    for the 100 TB framing.  Reads after the run use the restored
+    engine width.
+
+    The streaming functions are looked up on the module at call time, so
+    a wrapper patched onto ``flowbyte_spark.streaming.run_available_now``
+    (the v133 trigger ledgers in scripts/, the benchmark's span) sees
+    every trigger.
+    """
+    from flowbyte_spark import streaming
+
+    ckpt = _scratch_dir(f"{name}_ckpt")
+    writer = streaming.foreach_batch_sink(
+        stream, write, checkpoint=ckpt, output_mode=output_mode
+    )
+    try:
+        with streaming.scoped_sql_conf(
+            stream.sparkSession, **{"spark.sql.shuffle.partitions": "4"}
+        ):
+            streaming.run_available_now(writer)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _drain_to_parquet(stream: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """:func:`_drain` into a scratch parquet sink; returns the sink read back.
+
+    The sink's write mode follows the output mode: a ``complete`` batch
+    holds the whole result and overwrites the sink, so it ends holding
+    the final state; ``append`` batches hold only finalized rows and
+    accumulate; ``update`` batches re-emit the current rows of the keys
+    they touch and are appended with a ``batch_id`` column, so the reader
+    keeps the latest per key.  Nothing is collected on the driver — the
+    result stays a lazy parquet read at any output cardinality.
+    """
+    out = _scratch_dir(f"{name}_result")
+    mode = "overwrite" if output_mode == "complete" else "append"
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        if output_mode == "update":
+            batch_df = batch_df.withColumn("batch_id", F.lit(batch_id))
+        batch_df.write.mode(mode).parquet(out)
+
+    _drain(stream, name, output_mode, write)
+    return stream.sparkSession.read.parquet(out)
+
+
 _V15_ORACLE = """
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_ts,
            event_type,
@@ -112,30 +164,11 @@ def v32_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(2)
         .write.parquet(p),
     )
-    ckpt = _scratch_dir("v32_ckpt")
-
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     agg = tumbling_window_agg(stream, "1 hour", watermark="3650 days")
-
-    # Complete mode: every micro-batch overwrites the scratch sink, so the
-    # sink holds exactly the final state when the stream drains.  Nothing
-    # is collected on the driver — the result stays a lazy parquet read at
-    # any output cardinality.
-    out = _scratch_dir("v32_result")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out)
-
-    writer = foreach_batch_sink(
-        agg, write, checkpoint=ckpt, output_mode="complete"
+    return _drain_to_parquet(agg, "v32", "complete").orderBy(
+        "hour_ts", "event_type"
     )
-    from flowbyte_spark.streaming import scoped_sql_conf
-
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out).orderBy("hour_ts", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -169,28 +202,13 @@ def v59_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(2)
         .write.parquet(p),
     )
-    ckpt = _scratch_dir("v59_ckpt")
-
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     agg = tumbling_window_agg(
         stream, "2 hours", watermark="3650 days", slide="1 hour"
     )
-
-    out = _scratch_dir("v59_result")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out)
-
-    writer = foreach_batch_sink(
-        agg, write, checkpoint=ckpt, output_mode="complete"
+    return _drain_to_parquet(agg, "v59", "complete").orderBy(
+        "hour_ts", "event_type"
     )
-    from flowbyte_spark.streaming import scoped_sql_conf
-
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out).orderBy("hour_ts", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -220,8 +238,6 @@ def v59_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("v60_late_data_drop", oracle=_V15_ORACLE)
 def v60_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
-
-    from pyspark.sql import functions as F
 
     def _build(path: str) -> None:
         events = load_table(spark, sf_dir, "events")
@@ -257,33 +273,11 @@ def v60_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
                     pinned.add(f)
 
     src = _memo_source("v60_events", sf_dir, _build)
-    ckpt = _scratch_dir("v60_ckpt")
-
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     agg = tumbling_window_agg(stream, "1 hour", watermark="1 hour")
-
-    # Append mode: accumulate finalized windows in the scratch sink (one
-    # parquet append per micro-batch) — no driver-side row accumulation,
-    # so the pattern survives a 100x hour-grid blow-up.
-    out = _scratch_dir("v60_result")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    writer = foreach_batch_sink(
-        agg, write, checkpoint=ckpt, output_mode="append"
+    return _drain_to_parquet(agg, "v60", "append").orderBy(
+        "hour_ts", "event_type"
     )
-    # State width right-sized to the live window count (~25 hourly
-    # windows inside the 1 h watermark horizon) for the duration of the
-    # synchronous run — see scoped_sql_conf's docstring for the 100 TB
-    # framing.  The batch sort below runs at the restored engine width.
-    from flowbyte_spark.streaming import scoped_sql_conf
-
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out).orderBy("hour_ts", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -305,10 +299,7 @@ _V73_ORACLE = """
 
 @register("v73_stream_dedup", oracle=_V73_ORACLE)
 def v73_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flowbyte_spark.streaming import (
-        dedup_within_watermark,
-        scoped_sql_conf,
-    )
+    from flowbyte_spark.streaming import dedup_within_watermark
 
     def _build(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
@@ -316,28 +307,14 @@ def v73_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.repartition(1).write.mode("append").parquet(path)  # batch 2: dupes
 
     src = _memo_source("v73_events", sf_dir, _build)
-    ckpt = _scratch_dir("v73_ckpt")
-    out = _scratch_dir("v73_result")
-
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     deduped = dedup_within_watermark(
         stream, keys=["event_id"], watermark="3650 days"
     )
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        # Append mode: each batch lands only its first-seen rows; the sink
-        # accumulates exactly the distinct set.
-        batch_df.write.mode("append").parquet(out)
-
-    writer = foreach_batch_sink(
-        deduped, write, checkpoint=ckpt, output_mode="append"
-    )
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-
-    shutil.rmtree(ckpt, ignore_errors=True)
+    # Append mode: each batch lands only its first-seen rows; the sink
+    # accumulates exactly the distinct set.
     return (
-        spark.read.parquet(out)
+        _drain_to_parquet(deduped, "v73", "append")
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
     )
@@ -355,7 +332,7 @@ _V75_USER_CAP = 300  # applyInPandasWithState pays ~ms per key per batch
 # (Arrow group round-trip + state-store write); the gate verifies the
 # state MACHINE — cross-batch accumulation, exact integer state — which a
 # bounded key subset proves identically, so the bench constant stays
-# O(cap), not O(all users), the same scoping call v60 made for its
+# O(cap), not O(all users), the same scoping call _drain makes for the
 # state-store width.
 
 _V75_ORACLE = f"""
@@ -372,47 +349,23 @@ _V75_ORACLE = f"""
 
 @register("v75_stateful_totals", oracle=_V75_ORACLE)
 def v75_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flowbyte_spark.streaming import scoped_sql_conf
+    from flowbyte_spark.operators.topk import top_k_per_group
     from flowbyte_spark.streaming.stateful import running_user_totals_exact
-
-    from pyspark.sql import functions as SF
 
     src = _memo_source(
         "v75_events",
         sf_dir,
         lambda p: load_table(spark, sf_dir, "events")
-        .where(SF.col("user_id") < _V75_USER_CAP)
+        .where(F.col("user_id") < _V75_USER_CAP)
         .repartition(2)
         .write.parquet(p),
     )
-    ckpt = _scratch_dir("v75_ckpt")
-    out = _scratch_dir("v75_result")
-
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     totals = running_user_totals_exact(stream, watermark="3650 days")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        # Update mode re-emits a user's CURRENT totals whenever a batch
-        # touches them; tag emissions with the batch so the reader keeps
-        # the latest per user.
-        import pyspark.sql.functions as SF
-
-        batch_df.withColumn("batch_id", SF.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out)
-
-    writer = foreach_batch_sink(
-        totals, write, checkpoint=ckpt, output_mode="update"
-    )
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    from flowbyte_spark.operators.topk import top_k_per_group
-    from pyspark.sql import functions as F
-
+    # Update mode re-emits a user's CURRENT totals whenever a batch
+    # touches them; keep the latest emission per user.
     latest = top_k_per_group(
-        spark.read.parquet(out),
+        _drain_to_parquet(totals, "v75", "update"),
         ["user_id"],
         [F.col("batch_id").desc()],
         k=1,
@@ -445,15 +398,11 @@ _V76_DELTA_SCHEMA = "c_custkey BIGINT, c_acctbal DOUBLE, c_mktsegment STRING"
 
 @register("v76_stream_upsert", oracle=_V76_ORACLE)
 def v76_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from flowbyte_spark.operators.mutate import ParquetTable
-    from flowbyte_spark.streaming import scoped_sql_conf
 
     # The managed TABLE must be fresh per run (each merge mutates it);
     # only the delta stream files are memoizable scaffolding.
     tbl_path = _scratch_dir("v76_customer")
-    ckpt = _scratch_dir("v76_ckpt")
     customer = load_table(spark, sf_dir, "customer")
     customer.write.parquet(tbl_path)
     table = ParquetTable(spark, tbl_path)
@@ -482,13 +431,7 @@ def v76_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         table.update_by_keys(batch_df, ["c_custkey"])
 
-    writer = foreach_batch_sink(
-        stream, apply, checkpoint=ckpt, output_mode="append"
-    )
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-
-    shutil.rmtree(ckpt, ignore_errors=True)
+    _drain(stream, "v76", "append", apply)
     return (
         table.read()
         .select(
@@ -527,8 +470,6 @@ _V81_ORACLE = """
 
 @register("v81_stream_stream_join", oracle=_V81_ORACLE)
 def v81_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from flowbyte_spark.streaming import stream_stream_join
 
     src = _memo_source(
@@ -538,8 +479,6 @@ def v81_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(2)
         .write.parquet(p),
     )
-    ckpt = _scratch_dir("v81_ckpt")
-
     views = read_event_stream(spark, src, max_files_per_trigger=1).where(
         F.col("event_type") == "view"
     )
@@ -562,20 +501,9 @@ def v81_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "delay_us"
         ),
     )
-
-    out = _scratch_dir("v81_result")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    writer = foreach_batch_sink(joined, write, checkpoint=ckpt, output_mode="append")
-    from flowbyte_spark.streaming import scoped_sql_conf
-
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out).orderBy("view_id", "click_id")
+    return _drain_to_parquet(joined, "v81", "append").orderBy(
+        "view_id", "click_id"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -601,8 +529,6 @@ def v81_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v111_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     src = _memo_source(
         "v32_events",
         sf_dir,
@@ -610,8 +536,6 @@ def v111_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(2)
         .write.parquet(p),
     )
-    ckpt = _scratch_dir("v111_ckpt")
-
     # static user-tier dim, derived deterministically so DuckDB can
     # reproduce the enrichment with a CASE
     users = (
@@ -637,17 +561,4 @@ def v111_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value").cast("double"), 4).alias("value"),
     )
-
-    out = _scratch_dir("v111_result")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    writer = foreach_batch_sink(enriched, write, checkpoint=ckpt, output_mode="append")
-    from flowbyte_spark.streaming import scoped_sql_conf
-
-    with scoped_sql_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
-        run_available_now(writer)
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out).orderBy("event_id")
+    return _drain_to_parquet(enriched, "v111", "append").orderBy("event_id")

@@ -19,9 +19,10 @@ Protocol (contention-aware, the soak-script convention):
 - per block: one warm-up run + N timed runs (fresh scratch checkpoint
   per run — v133 builds its own), median reported;
 - per-trigger recentProgress captured exactly as
-  scripts/v133_stream_ledger.py does (patched ``run_available_now`` —
-  instrumentation stays OUT of flowbyte_spark.streaming so the shared
-  runner is not marked in-round-changed).
+  scripts/v133_stream_ledger.py does (patched ``run_available_now``,
+  which ``queries/streaming_q.py:_drain`` looks up on the module at call
+  time — instrumentation stays OUT of flowbyte_spark.streaming so the
+  shared runner is not marked in-round-changed).
 
 Usage: python scripts/v133_statestore_ab.py [runs_per_block]
 """

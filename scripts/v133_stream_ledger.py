@@ -5,9 +5,10 @@ stateful operators) twice — warm-up then timed, the bench.py
 convention — with ``run_available_now`` wrapped to dump each query's
 per-trigger recentProgress JSON.  The wrap lives HERE, not in
 ``flowbyte_spark.streaming``, so the shared runner stays
-uninstrumented: v133 resolves ``run_available_now`` through a
-call-time import, so patching the module attribute reaches it without
-touching product code.
+uninstrumented: every streaming query drains through
+``queries/streaming_q.py:_drain``, which looks ``run_available_now`` up
+on the module at call time, so patching the module attribute reaches
+it without touching product code.
 
 BASELINE.md §Round-13 records the decomposition (per-trigger
 durationMs legs + stateOperators commit times) and the per-trigger

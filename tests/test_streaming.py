@@ -149,3 +149,43 @@ def test_post_batch_hook_failure_does_not_kill_stream(spark, event_files, tmp_pa
     )
     run_available_now(writer)  # must not raise
     assert calls, "hook should have been invoked per micro-batch"
+
+
+def test_drain_deletes_its_checkpoint_when_the_run_fails(spark, event_files):
+    import glob
+    import os
+
+    from flowbyte_spark.queries.streaming_q import _drain
+    from flowbyte_spark.queries.tier_a import _SCRATCH
+
+    def write(batch_df, batch_id):
+        raise RuntimeError("sink unavailable")
+
+    stream = read_event_stream(spark, event_files)
+    with pytest.raises(Exception, match="sink unavailable"):
+        _drain(stream, "drain_failing", "append", write)
+    assert glob.glob(os.path.join(_SCRATCH, "drain_failing_ckpt_*")) == []
+
+
+def test_drain_to_parquet_triggers_through_the_module(spark, event_files, monkeypatch):
+    # a wrapper patched onto the module attribute must see every trigger
+    import flowbyte_spark.streaming as streaming
+    from flowbyte_spark.queries.streaming_q import _drain_to_parquet
+
+    calls = []
+    run = streaming.run_available_now
+
+    def counting(writer):
+        calls.append(writer)
+        run(writer)
+
+    monkeypatch.setattr(streaming, "run_available_now", counting)
+    agg = tumbling_window_agg(
+        read_event_stream(spark, event_files), "1 hour", watermark="30 days"
+    )
+    got = _drain_to_parquet(agg, "drain_complete", "complete")
+    assert len(calls) == 1
+    twin = tumbling_window_agg(
+        spark.read.parquet(event_files), "1 hour", watermark="30 days"
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, twin.collect()))

@@ -58,23 +58,13 @@ def test_compile_delete():
 
 
 def test_compile_merge_with_presence_flags():
-    sql = compile_merge_update(
-        "db.t", "v", ["k1", "k2"], ["a", "b"], presence_flags=True
-    )
+    sql = compile_merge_update("db.t", "v", ["k1", "k2"], ["a", "b"])
     assert sql == (
         "MERGE INTO `db`.`t` AS t USING `v` AS s "
         "ON t.`k1` = s.`k1` AND t.`k2` = s.`k2` "
         "WHEN MATCHED THEN UPDATE SET "
         "t.`a` = CASE WHEN s.`__has_a__` THEN s.`a` ELSE t.`a` END, "
         "t.`b` = CASE WHEN s.`__has_b__` THEN s.`b` ELSE t.`b` END"
-    )
-
-
-def test_compile_merge_plain():
-    sql = compile_merge_update("t", "v", ["k"], ["a"], presence_flags=False)
-    assert sql == (
-        "MERGE INTO `t` AS t USING `v` AS s ON t.`k` = s.`k` "
-        "WHEN MATCHED THEN UPDATE SET t.`a` = s.`a`"
     )
 
 

@@ -278,6 +278,21 @@ def test_update_from_table_launches_three_jobs(spark, target, tmp_path):
     assert got.values.tolist() == [[1, "a", 10.0], [2, "b", 22.0], [3, "c", 30.0]]
 
 
+def test_update_that_sets_nothing_keeps_the_table(spark, target, tmp_path):
+    # keys-only updates set no column: no job, no rewrite of the directory
+    import os
+
+    table = ParquetTable(spark, str(tmp_path / "t"))
+    table.overwrite(target)
+    inode = os.stat(table.path).st_ino
+    keys_only = spark.createDataFrame([(2,)], "id LONG")
+    for updates in ([{"id": 1}], keys_only):
+        n = _jobs_launched(spark, lambda: table.update_by_keys(updates, ["id"]))
+        assert n == 0
+        assert os.stat(table.path).st_ino == inode
+    assert rows(table.read()) == rows(target)
+
+
 # ---------------------------------------------------------------------------
 # Cast directives
 # ---------------------------------------------------------------------------
