@@ -66,8 +66,6 @@ def grouped_mean_embedding(df, group_col: str, vec_col: str):
     the standard pattern for custom per-group math that Catalyst
     aggregates cannot express.  One shuffle on the group key; each group
     is a pandas DataFrame in executor memory."""
-    dim_probe = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    dim = dim_probe["d"] if dim_probe else 0
 
     def mean_vec(pdf: pd.DataFrame) -> pd.DataFrame:
         # SQL AVG/COUNT(col) semantics: NULL vectors don't contribute,
@@ -91,5 +89,4 @@ def grouped_mean_embedding(df, group_col: str, vec_col: str):
         f"{group_col} {df.schema[group_col].dataType.simpleString()}, "
         f"mean_embedding array<double>, n bigint"
     )
-    _ = dim  # dim retained for schema documentation/debugging
     return df.groupBy(group_col).applyInPandas(mean_vec, out_schema)

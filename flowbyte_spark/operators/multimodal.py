@@ -209,17 +209,6 @@ def _set_arrow_batch(media: DataFrame, batch_size: int | None) -> None:
         )
 
 
-def read_binary_dir(spark, path: str, glob: str = "*") -> DataFrame:
-    """Ingest raw media files as (path, modificationTime, length, content)
-    via Spark's binaryFile source — the standard way multimodal payloads
-    enter the pipeline."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-
-
 def extract_features(
     media: DataFrame,
     batch_size: int | None = None,

@@ -101,8 +101,7 @@ def _drain(stream: DataFrame, name: str, output_mode: str, write) -> None:
 
     The streaming functions are looked up on the module at call time, so
     a wrapper patched onto ``flowbyte_spark.streaming.run_available_now``
-    (the v133 trigger ledgers in scripts/, the benchmark's span) sees
-    every trigger.
+    (the benchmark's span) sees every trigger.
     """
     from flowbyte_spark import streaming
 

@@ -3,7 +3,9 @@
 The built-in windows cover time bucketing; this module is the escape hatch
 for custom per-key state machines.  Reference operator:
 :func:`running_user_totals` — per-user running event count + value sum
-maintained across micro-batches, with watermark-driven state expiry.
+maintained across micro-batches, with watermark-driven state expiry.  The
+exact integer-cent variant's fold (:func:`_fold_exact`) also drives its
+transformWithStateInPandas twin, :class:`RunningTotalsProcessor`.
 
 Key-cardinality guard (lifted out of the v75 query in round 6 — VERDICT
 r5 defect 3): ``applyInPandasWithState`` pays ~1 ms per key per batch
@@ -28,7 +30,7 @@ key domain (v75 filters ``user_id < 300`` before grouping) can pass
 from __future__ import annotations
 
 import uuid
-from typing import Any, Iterable
+from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -145,19 +147,12 @@ EXACT_STATE_SCHEMA = "cnt BIGINT, nn BIGINT, cents BIGINT"
 EXACT_OUTPUT_SCHEMA = "user_id BIGINT, cnt BIGINT, total DOUBLE"
 
 
-def _update_user_exact(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    guard_id: str,
-    max_keys: int | None,
-) -> Iterable[pd.DataFrame]:
-    (user_id,) = key
-    _count_seen_key(guard_id, key, max_keys)
-    if state.exists:
-        cnt, nn, cents = state.get
-    else:
-        cnt, nn, cents = 0, 0, 0
+def _fold_exact(
+    acc: tuple[int, int, int], pdfs: Iterable[pd.DataFrame]
+) -> tuple[int, int, int]:
+    """Fold a key's new rows into its ``EXACT_STATE_SCHEMA`` tuple
+    ``(cnt, nn, cents)``; shared by both exact running-totals machines."""
+    cnt, nn, cents = acc
     for pdf in pdfs:
         cnt += len(pdf)
         # dropna BEFORE the int cast (round 15): astype("int64") on a
@@ -167,14 +162,33 @@ def _update_user_exact(
         v = pdf["value"].dropna()
         nn += len(v)
         cents += int((v * 100).round().astype("int64").sum())
-    state.update((cnt, nn, cents))
-    yield pd.DataFrame(
+    return cnt, nn, cents
+
+
+def _exact_row(user_id, acc: tuple[int, int, int]) -> pd.DataFrame:
+    """The ``EXACT_OUTPUT_SCHEMA`` emission for one key's state."""
+    cnt, nn, cents = acc
+    return pd.DataFrame(
         {
             "user_id": [user_id],
             "cnt": [cnt],
             "total": [cents / 100.0 if nn else None],
         }
     )
+
+
+def _update_user_exact(
+    key: tuple,
+    pdfs: Iterable[pd.DataFrame],
+    state: GroupState,
+    guard_id: str,
+    max_keys: int | None,
+) -> Iterable[pd.DataFrame]:
+    (user_id,) = key
+    _count_seen_key(guard_id, key, max_keys)
+    acc = _fold_exact(state.get if state.exists else (0, 0, 0), pdfs)
+    state.update(acc)
+    yield _exact_row(user_id, acc)
 
 
 def running_user_totals_exact(
@@ -214,18 +228,15 @@ def running_user_totals_exact(
 
 
 # ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4's arbitrary-state API; round 6).
-# applyInPandasWithState's successor: a StatefulProcessor object with
-# named state variables (value/list/map), timers, and TTL, backed by the
-# RocksDB state store.  The operator below is the exact-integer-cent
-# running-totals machine again — same semantics as
-# running_user_totals_exact — so the two APIs are mutually verifiable.
-# ENVIRONMENT GATE: the transformWithState Python worker speaks a
-# protobuf-encoded state-server protocol; this sandbox has no
-# `google.protobuf`, so execution is covered by a skip-marked test
-# (tests/test_skew_stateful.py) that runs wherever protobuf exists —
-# same policy as the Delta e2e variant.  Plan construction and the
-# processor class itself are exercised unconditionally.
+# transformWithStateInPandas (Spark 4's arbitrary-state API; round 6):
+# a StatefulProcessor with named state variables, timers and TTL on the
+# RocksDB state store.  The operator below is the exact running-totals
+# machine again, with the same fold and emission as
+# running_user_totals_exact, so the two APIs are mutually verifiable.
+# Its Python worker speaks a protobuf state-server protocol; where
+# `google.protobuf` is missing, the execution test in
+# tests/test_skew_stateful.py skips, and the plan build and the
+# processor's fold (through a fake state handle) are still tested.
 # ---------------------------------------------------------------------------
 try:  # pyspark >= 4
     from pyspark.sql.streaming.stateful_processor import (
@@ -238,11 +249,12 @@ except ImportError:  # pragma: no cover - pyspark 3.x fallback
 
 
 class RunningTotalsProcessor(StatefulProcessor):
-    """Per-key (cnt, cents) accumulator with update-mode emissions.
+    """Per-key (cnt, nn, cents) accumulator with update-mode emissions.
 
-    State is ONE value-state entry per user; integer cents keep the
-    result independent of micro-batch row splits (the v75 rule).  The
-    ``max_keys`` brake reuses the module accounting above.
+    State is ONE ``EXACT_STATE_SCHEMA`` value-state entry per user, folded
+    and emitted by the same :func:`_fold_exact` / :func:`_exact_row` as
+    :func:`running_user_totals_exact`.  The ``max_keys`` brake reuses the
+    module accounting above.
     """
 
     def __init__(self, max_keys: int | None = DEFAULT_MAX_KEYS):
@@ -254,17 +266,10 @@ class RunningTotalsProcessor(StatefulProcessor):
 
     def handleInputRows(self, key, rows, timerValues):
         _count_seen_key(self._guard_id, tuple(key), self._max_keys)
-        if self._state.exists():
-            cnt, cents = self._state.get()
-        else:
-            cnt, cents = 0, 0
-        for pdf in rows:
-            cnt += len(pdf)
-            cents += int((pdf["value"] * 100).round().astype("int64").sum())
-        self._state.update((cnt, cents))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "cnt": [cnt], "total": [cents / 100.0]}
-        )
+        acc = self._state.get() if self._state.exists() else (0, 0, 0)
+        acc = _fold_exact(acc, rows)
+        self._state.update(acc)
+        yield _exact_row(key[0], acc)
 
     def close(self) -> None:
         pass

@@ -164,3 +164,36 @@ def test_session_factory_honors_cpus_env():
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "MASTER=local[3]" in proc.stdout
+
+
+def _resolves(module: str, name: str) -> bool:
+    import importlib
+    import importlib.util
+
+    try:
+        mod = importlib.import_module(module)
+        # a submodule its package does not import is not an attribute
+        return hasattr(mod, name) or bool(importlib.util.find_spec(f"{module}.{name}"))
+    except ImportError:
+        return False
+
+
+def test_kept_scripts_import_names_the_library_still_has():
+    """Every ``from flowbyte_spark.X import a`` in scripts/*.py and
+    bench.py, lazy imports inside functions included, names a module and
+    attribute that exist, so a library deletion cannot silently break a
+    kept script."""
+    import ast
+    import glob
+
+    paths = glob.glob(os.path.join(REPO, "scripts", "*.py"))
+    broken = [
+        f"{os.path.basename(path)}:{node.lineno} {node.module}.{alias.name}"
+        for path in paths + [os.path.join(REPO, "bench.py")]
+        for node in ast.walk(ast.parse(open(path).read()))
+        if isinstance(node, ast.ImportFrom)
+        and (node.module or "").split(".")[0] == "flowbyte_spark"
+        for alias in node.names
+        if not _resolves(node.module, alias.name)
+    ]
+    assert not broken, broken

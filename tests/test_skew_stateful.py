@@ -344,6 +344,68 @@ def test_transform_with_state_plan_builds(spark, tmp_path):
     assert df.isStreaming
 
 
+class _KeyedValueState:
+    """transformWithState's value state, scoped to the current grouping
+    key; like Spark's, it rejects a tuple of the wrong arity."""
+
+    def __init__(self, schema: str):
+        self.arity, self.values, self.key = len(schema.split(",")), {}, None
+
+    def exists(self):
+        return self.key in self.values
+
+    def get(self):
+        return self.values[self.key]
+
+    def update(self, value):
+        assert len(value) == self.arity, value
+        self.values[self.key] = tuple(value)
+
+
+def test_transform_with_state_processor_folds_like_the_exact_machine():
+    """No Spark job: the StatefulProcessor stores the 3-field exact state
+    and emits what running_user_totals_exact's update function emits on
+    the same batches, NULL values and an all-NULL user included."""
+    from collections import defaultdict
+    from types import SimpleNamespace
+
+    import pandas as pd
+
+    from flowbyte_spark.streaming.stateful import (
+        RunningTotalsProcessor,
+        _update_user_exact,
+    )
+
+    def group_state():  # applyInPandasWithState's: exists/get are properties
+        gs = SimpleNamespace(exists=False, get=None)
+        gs.update = lambda v: vars(gs).update(exists=True, get=v)
+        return gs
+
+    handle = SimpleNamespace(
+        getValueState=lambda name, schema: vars(handle).setdefault(
+            "state", _KeyedValueState(schema)
+        )
+    )
+    proc = RunningTotalsProcessor(max_keys=None)
+    proc.init(handle)
+    group_states = defaultdict(group_state)
+    last = {}
+    # user 1 gets a NULL in its second batch; user 2 is all-NULL
+    batches = [{1: [1.25, 2.5], 2: [None]}, {1: [None, 0.1], 2: [None], 3: [4.0]}]
+    for batch in batches:
+        for uid, values in batch.items():
+            pdf = pd.DataFrame({"user_id": uid, "value": values}, dtype=float)
+            handle.state.key = (uid,)
+            (got,) = proc.handleInputRows((uid,), iter([pdf]), None)
+            (want,) = _update_user_exact(
+                (uid,), iter([pdf]), group_states[uid], "fake", None
+            )
+            pd.testing.assert_frame_equal(got, want)
+            last[uid] = (got.cnt[0], got.total[0])
+    assert last == {1: (4, 3.85), 2: (2, None), 3: (1, 4.0)}
+    assert handle.state.values == {(u,): gs.get for u, gs in group_states.items()}
+
+
 @pytest.mark.skipif(not _has_protobuf(), reason="no google.protobuf in sandbox")
 def test_transform_with_state_matches_apply_in_pandas(spark, tmp_path):
     """Where protobuf exists: the transformWithState machine must emit

@@ -16,6 +16,7 @@ from flowbyte_spark.functions.udfs import (
 )
 from flowbyte_spark.operators.text import token_count
 from flowbyte_spark.sources.jdbc import JDBCSource
+from tests.test_tier_a_operators import _jobs_launched
 
 SF = "/root/testdata/sf0.001"
 
@@ -45,6 +46,10 @@ def test_pandas_token_count_matches_catalyst(spark):
 
 def test_grouped_mean_embedding(spark):
     emb = load_table(spark, SF, "embeddings")
+    # building the grouped-map plan runs no job
+    assert _jobs_launched(
+        spark, lambda: grouped_mean_embedding(emb, "label", "embedding")
+    ) == 0
     out = grouped_mean_embedding(emb, "label", "embedding")
     rows = {r.label: r for r in out.collect()}
     assert set(rows) == set(range(10))

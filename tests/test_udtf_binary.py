@@ -49,14 +49,18 @@ def test_short_text_yields_single_chunk(spark):
 
 
 def test_binary_file_ingestion(spark, tmp_path):
-    from flowbyte_spark.operators.multimodal import extract_features, read_binary_dir
+    from flowbyte_spark.operators.multimodal import extract_features
 
     payloads = {f"img_{i}.bin": bytes([i]) * (10 + i) for i in range(5)}
     for name, data in payloads.items():
         (tmp_path / name).write_bytes(data)
     (tmp_path / "ignore.txt").write_text("not matched by glob")
 
-    df = read_binary_dir(spark, str(tmp_path), glob="*.bin")
+    df = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.bin")
+        .load(str(tmp_path))
+    )
     rows = df.select("path", "length", "content").collect()
     assert len(rows) == 5
     by_name = {r.path.rsplit("/", 1)[-1]: r for r in rows}
