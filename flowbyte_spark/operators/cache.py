@@ -180,15 +180,7 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     return df
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted DataFrame for later release (for
-    operators that manage persist timing themselves, e.g. iterative
-    loops that persist per round)."""
-    _TRACKED.append(df)
-    return df
-
-
-def release_persisted(blocking: bool = False) -> int:
+def release_persisted() -> int:
     """Unpersist every tracked entry; returns how many were released.
 
     Persist entries are safe to release at any time (plans recompute on
@@ -199,7 +191,7 @@ def release_persisted(blocking: bool = False) -> int:
     while _TRACKED:
         entry = _TRACKED.pop()
         try:
-            entry.unpersist(blocking)
+            entry.unpersist()
             released += 1
         except Exception:  # session already stopped — nothing to release
             pass

@@ -5,9 +5,7 @@ dedup pipeline needs CLUSTERS: if A~B and B~C, all three are one group and
 exactly one survivor should be kept.  That is connected components on the
 pair graph, which the reference delegates wholesale to its attached engine
 (pass-through SQL, /root/reference/src/flowbyte/sql.py:109); Spark has no
-built-in either, so this implements two distributed algorithms:
-
-``algorithm="label"`` — min-label propagation:
+built-in either, so this implements min-label propagation:
 
 1. symmetrize the edge list (one shuffle, done once);
 2. every node starts labeled with its own id;
@@ -19,15 +17,8 @@ built-in either, so this implements two distributed algorithms:
 
 Rounds needed = graph diameter.  Near-dup clusters are dense and tiny
 (a duplicate "family" collapses in 2-3 hops), so the loop converges in a
-handful of rounds even at 100 TB.
-
-``algorithm="two-phase"`` — alternating large-star/small-star (Kiveris
-et al., "Connected Components in MapReduce and Beyond", SoCC'14).  Each
-round rewires every edge toward its neighborhood minimum, which
-contracts path-shaped graphs in O(log d) rounds instead of O(d): the
-fallback for adversarial long-chain duplicate graphs.  Both steps are
-a groupBy-min plus a join — no per-node neighbor lists are ever
-collected, so high-degree nodes cost a shuffle, not executor memory.
+handful of rounds even at 100 TB; a long chain needs ``max_iterations``
+at least its diameter.
 
 Each round ``localCheckpoint(eager=True)``-s the new table: unlike
 ``persist`` (which caches data but keeps the full logical plan, so the
@@ -48,7 +39,6 @@ from flowbyte_spark import log
 from flowbyte_spark.operators.cache import (
     make_checkpointer,
     persist_tracked,
-    track,
     track_checkpoint,
 )
 
@@ -58,7 +48,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 25,
-    algorithm: str = "label",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Assign every node in ``pairs`` its component id (= min node id in
@@ -68,27 +57,16 @@ def connected_components(
     pair.  Isolated nodes (no pairs) are the caller's concern — they are
     their own component by definition and need no shuffle to label.
 
-    ``algorithm`` selects min-label propagation (``"label"``, rounds =
-    graph diameter, cheapest per round) or alternating star contraction
-    (``"two-phase"``, O(log diameter) rounds for chain-shaped graphs).
-
     ``checkpoint_dir`` switches the per-round lineage truncation from
     ``localCheckpoint`` (blocks die with an executor) to reliable
     checkpoints under that directory — point it at HDFS/object storage on
     a real cluster so a 100 TB run survives executor loss.
 
-    The returned DataFrame is persisted and registered with
-    ``cache.release_persisted()``; materialize it before releasing.
+    The returned DataFrame is the final round's checkpoint, registered
+    with ``cache.release_persisted()``; materialize it before releasing.
     """
-    if algorithm == "two-phase":
-        return _two_phase_components(
-            pairs, src, dst, max_iterations, checkpoint_dir
-        )
-    if algorithm != "label":
-        raise ValueError(
-            f"unknown components algorithm {algorithm!r}; "
-            "expected 'label' or 'two-phase'"
-        )
+    if max_iterations < 1:
+        raise ValueError("max_iterations must be >= 1")
     checkpoint = make_checkpointer(pairs.sparkSession, checkpoint_dir)
     e = pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # symmetrize WITHOUT distinct: the pair list already has id_a < id_b
@@ -110,34 +88,21 @@ def connected_components(
     # 2 label rounds on the v64 fixture graph) saves one full
     # join+aggregate+checkpoint+convergence cycle per call.  Every node
     # appears as dst in the symmetrized edge list, so the groupBy(dst)
-    # key set IS the old distinct(src) node set.  max_iterations=0 keeps
-    # the pre-fusion contract (labels = own id, zero rounds).
-    converged = False
-    rounds_left = max_iterations
-    if max_iterations == 0:
-        labels, handle = checkpoint(
-            edges.select(F.col("src").alias("id"))
-            .distinct()
-            .withColumn("comp", F.col("id"))
+    # key set IS the old distinct(src) node set.
+    labels, handle = checkpoint(
+        edges.groupBy(F.col("dst").alias("id"))
+        .agg(F.min("src").alias("nbr_min"))
+        .select(
+            "id",
+            F.least(F.col("id"), F.col("nbr_min")).alias("comp"),
+            (F.least(F.col("id"), F.col("nbr_min")) != F.col("id"))
+            .cast("long")
+            .alias("changed"),
         )
-    else:
-        labels, handle = checkpoint(
-            edges.groupBy(F.col("dst").alias("id"))
-            .agg(F.min("src").alias("nbr_min"))
-            .select(
-                "id",
-                F.least(F.col("id"), F.col("nbr_min")).alias("comp"),
-                (F.least(F.col("id"), F.col("nbr_min")) != F.col("id"))
-                .cast("long")
-                .alias("changed"),
-            )
-        )
-        changed = labels.agg(F.sum("changed")).collect()[0][0] or 0
-        rounds_left = max_iterations - 1  # the fused init consumed round 1
-        if changed == 0:
-            converged = True  # round 1 moved nothing: done before the loop
-            rounds_left = 0
-        labels = labels.select("id", "comp")
+    )
+    changed = labels.agg(F.sum("changed")).collect()[0][0] or 0
+    converged = changed == 0  # round 1 moved nothing: done before the loop
+    labels = labels.select("id", "comp")
     # Convergence = a round changed zero labels.  The changed flag is
     # exact for every id type (a sum over the labels themselves would be
     # NULL for string ids and can alias under overflow for long ones).
@@ -148,7 +113,8 @@ def connected_components(
     # per round: driver OOM rendering it long before 500 rounds).  The
     # superseded round's blocks are freed deterministically inside
     # local_checkpoint — executor storage holds at most two round tables.
-    for _ in range(rounds_left):
+    # The fused init already ran round 1 of the max_iterations budget.
+    for _ in range(0 if converged else max_iterations - 1):
         nbr_min = (
             edges.join(labels, edges.src == labels.id)
             .groupBy(F.col("dst").alias("id"))
@@ -176,7 +142,8 @@ def connected_components(
         log.warning(
             f"connected_components: max_iterations={max_iterations} "
             "exhausted before convergence; labels may span unmerged "
-            "components (use algorithm='two-phase' for long-chain graphs)"
+            "components (raise max_iterations to at least the graph "
+            "diameter)"
         )
 
     # Register the final checkpoint's HANDLE, not the DataFrame: the
@@ -186,134 +153,10 @@ def connected_components(
     return labels.select("id", "comp")
 
 
-def _star_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
-    """Canonical directed edge list for star contraction: (u, v), u > v."""
-    return (
-        pairs.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _edge_signature(edges: DataFrame) -> tuple:
-    """(row count, xxhash64 sum) fingerprint of an edge set.
-
-    An unchanged edge set always produces an equal signature (no false
-    continue); a false stop needs a sum-of-xxhash64 collision between
-    two DIFFERENT edge sets produced in consecutive rounds — negligible,
-    and far cheaper than a set-difference join per round.
-    """
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("u", "v")).alias("h"),
-    ).collect()[0]
-    return (row["n"], row["h"])
-
-
-def _two_phase_components(
-    pairs: DataFrame,
-    src: str,
-    dst: str,
-    max_iterations: int,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Alternating large-star / small-star contraction (Kiveris et al.).
-
-    large-star: every node connects its strictly-larger neighbors to the
-    minimum of its closed neighborhood.  small-star: every node connects
-    itself and its smaller neighbors to its minimum smaller neighbor.
-    Alternating the two halves the effective diameter per round, so a
-    path graph of length d converges in O(log d) rounds.  Both steps are
-    expressed as groupBy-min + join over the edge list — never a
-    collected neighbor list — so degree skew costs shuffle volume only.
-    """
-    checkpoint = make_checkpointer(pairs.sparkSession, checkpoint_dir)
-    edges = _star_edges(pairs, src, dst)
-    nodes = persist_tracked(
-        edges.select(F.col("u").alias("id"))
-        .unionByName(edges.select(F.col("v").alias("id")))
-        .distinct()
-    )
-    edges, handle = checkpoint(edges)
-    sig = _edge_signature(edges)
-
-    converged = False
-    for _ in range(max_iterations):
-        # large-star over the symmetrized neighborhood
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("u", "mn").alias("m"))
-        )
-        large = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over edges pointing large -> small
-        smins = large.groupBy("u").agg(F.min("v").alias("m"))
-        joined = large.join(smins, "u")
-        # localCheckpoint, NOT persist: persist caches data but keeps the
-        # whole logical plan, which doubles per round (each round's `small`
-        # builds on the previous round's plan) — the driver dies rendering
-        # the AQE plan string by ~round 10.  The checkpoint truncates
-        # lineage to the materialized RDD; the superseded round's blocks
-        # are freed deterministically inside local_checkpoint.
-        small, handle = checkpoint(
-            joined.filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(joined.select("u", "m").withColumnRenamed("m", "v"))
-            .distinct(),
-            release=handle,
-        )
-        new_sig = _edge_signature(small)
-        edges = small
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        log.warning(
-            f"connected_components(two-phase): max_iterations="
-            f"{max_iterations} exhausted before the edge set stabilized"
-        )
-
-    # Converged edge set is a union of stars: (member, root).  groupBy
-    # min instead of a bare projection so a maxiter-truncated run still
-    # yields one label per node.
-    direct = edges.groupBy(F.col("u").alias("id")).agg(
-        F.min("v").alias("direct_comp")
-    )
-    labels = (
-        nodes.join(direct, "id", "left")
-        .select(
-            "id", F.coalesce("direct_comp", F.col("id")).alias("comp")
-        )
-        .persist()
-    )
-    labels.count()  # materialize BEFORE the star-edge blocks are freed
-    # labels' MEMORY_AND_DISK persist is now the source of truth; its
-    # lineage still names the freed checkpoint, so losing the persisted
-    # blocks means executor loss — at which point a localCheckpoint-based
-    # job is restarting anyway (docs/SCALE.md: use reliable checkpoint on
-    # a real cluster).
-    handle.unpersist()
-    return track(labels)
-
-
 def neardup_clusters(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    algorithm: str = "label",
 ) -> DataFrame:
     """Cluster near-dup pairs and mark the survivor of each cluster.
 
@@ -323,7 +166,7 @@ def neardup_clusters(
     broadcasts when components are few; AQE decides (no hint — component
     count grows with data).
     """
-    cc = connected_components(pairs, src, dst, algorithm=algorithm)
+    cc = connected_components(pairs, src, dst)
     sizes = cc.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return cc.join(sizes, "comp").select(
         "id",
@@ -341,8 +184,6 @@ def pagerank_fixed_point(
     scale: int = 1_000_000_000,
     damping_pct: int = 85,
     checkpoint_dir: str | None = None,
-    broadcast_ranks: bool = True,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """PageRank in FIXED-POINT integer arithmetic — bit-exact on every
     engine and under every partitioning.
@@ -385,24 +226,10 @@ def pagerank_fixed_point(
     defeats map-side combine once nodes outgrow the per-partition row
     budget).  The rank table is O(nodes) and checkpoint-backed — a
     LogicalRDD with no stats, which Catalyst will never auto-broadcast
-    — so ``broadcast_ranks=True`` (default) pins the broadcast,
-    keeping every round's edge work map-side (measured 64 s → 17 s →
-    7.4 s across the r12 reworks at 1.2M edges, then 18.5 s → 11.4 s
-    at 35M edges from this restructure — see BASELINE.md round-13).
-    Pass ``False`` for graphs whose node table exceeds executor memory
-    (web-scale): rounds then shuffle edges on src, which is the
-    correct plan at that size (the dst pre-partitioning is skipped —
-    it would be wasted by the per-round src shuffle).
-
-    ``checkpoint_every`` spaces the eager checkpoints.  MEASURED WORSE
-    than the per-round default on the broadcast path (7.4 s → 11.2 s
-    at fixture scale with ``checkpoint_every=3``): every round's
-    broadcast exchange materializes its rank subplan anyway, so an
-    un-checkpointed prefix re-executes under each later broadcast
-    build — per-round checkpointing is what makes each round run
-    exactly once.  The knob stays for the ``broadcast_ranks=False``
-    shuffle path, where rounds genuinely chain inside one job and a
-    long-lineage guard every K rounds is the right trade.
+    — so the rank side is pinned as a broadcast, keeping every
+    round's edge work map-side (measured 64 s → 17 s → 7.4 s across
+    the r12 reworks at 1.2M edges, then 18.5 s → 11.4 s at 35M edges
+    from this restructure — see BASELINE.md round-13).
     """
     spark = edges.sparkSession
     checkpoint = make_checkpointer(spark, checkpoint_dir)
@@ -414,47 +241,42 @@ def pagerank_fixed_point(
         e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     )
     nodes = deg.select(F.col("src").alias("node"))
-    if broadcast_ranks:
-        # Pre-partition the bare edge table on dst: each round's
-        # contribution sum groups by dst, and with ~|nodes| distinct
-        # keys per partition map-side combine barely reduces the
-        # exchange (at 35M edges / 630k nodes the per-round shuffle
-        # still carried ~20M partial rows).  One up-front shuffle
-        # instead; the broadcast join and the alias-aware project both
-        # preserve HashPartitioning(dst→node), so every round's
-        # groupBy("node") is a zero-exchange partial+final agg in the
-        # same stage as the cached edge scan.
-        edges_p = persist_tracked(e.repartition(F.col("dst")))
-        # Materialize BEFORE the first round plans against it: an
-        # unmaterialized cached AQE plan reports unknown output
-        # partitioning, so round 1 would re-add the
-        # ENSURE_REQUIREMENTS exchange the repartition exists to
-        # eliminate.  One cheap count (the shuffle runs once anyway).
-        edges_p.count()
-    else:
-        # Web-scale path shuffles edges on src every round; a dst
-        # pre-partition would be pure waste.
-        edges_p = persist_tracked(e)
+    # Pre-partition the bare edge table on dst: each round's
+    # contribution sum groups by dst, and with ~|nodes| distinct
+    # keys per partition map-side combine barely reduces the
+    # exchange (at 35M edges / 630k nodes the per-round shuffle
+    # still carried ~20M partial rows).  One up-front shuffle
+    # instead; the broadcast join and the alias-aware project both
+    # preserve HashPartitioning(dst→node), so every round's
+    # groupBy("node") is a zero-exchange partial+final agg in the
+    # same stage as the cached edge scan.
+    edges_p = persist_tracked(e.repartition(F.col("dst")))
+    # Materialize BEFORE the first round plans against it: an
+    # unmaterialized cached AQE plan reports unknown output
+    # partitioning, so round 1 would re-add the
+    # ENSURE_REQUIREMENTS exchange the repartition exists to
+    # eliminate.  One cheap count (the shuffle runs once anyway).
+    edges_p.count()
     teleport = (scale * (100 - damping_pct)) // 100
     ranks, handle = checkpoint(
         nodes.withColumn("rank", F.lit(scale).cast("long"))
     )
-    deg_side = F.broadcast(deg) if broadcast_ranks else deg
-    for i in range(iterations):
+    for _ in range(iterations):
         # Fold degree into the RANK side (O(nodes)⋈O(nodes)), never
         # the edge side: per-source emission rate rank div d.
-        rates = ranks.join(deg_side, ranks["node"] == deg["src"]).select(
-            F.col("node").alias("u"),
-            F.expr("rank div d").alias("c"),
+        rates = F.broadcast(
+            ranks.join(F.broadcast(deg), ranks["node"] == deg["src"]).select(
+                F.col("node").alias("u"),
+                F.expr("rank div d").alias("c"),
+            )
         )
-        rate_side = F.broadcast(rates) if broadcast_ranks else rates
         contrib = (
-            edges_p.join(rate_side, edges_p["src"] == rate_side["u"])
+            edges_p.join(rates, edges_p["src"] == rates["u"])
             .select(F.col("dst").alias("node"), "c")
         )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        if broadcast_ranks:
-            summed = F.broadcast(summed)
+        summed = F.broadcast(
+            contrib.groupBy("node").agg(F.sum("c").alias("s"))
+        )
         # left join keeps no-inbound nodes at the teleport term (s=0)
         new_ranks = nodes.join(summed, "node", "left").select(
             "node",
@@ -463,10 +285,12 @@ def pagerank_fixed_point(
                 + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
             ).cast("long").alias("rank"),
         )
-        if (i + 1) % max(checkpoint_every, 1) == 0 or i == iterations - 1:
-            ranks, handle = checkpoint(new_ranks, release=handle)
-        else:
-            ranks = new_ranks
+        # Checkpoint EVERY round: each broadcast exchange materializes
+        # its rank subplan anyway, so an un-checkpointed prefix would
+        # re-execute under every later broadcast build (measured 7.4 s →
+        # 11.2 s at fixture scale with a checkpoint every third round,
+        # BASELINE.md §v160).
+        ranks, handle = checkpoint(new_ranks, release=handle)
     # Register the final checkpoint's HANDLE (the connected_components
     # rule): localCheckpoint blocks live outside the CacheManager, so
     # without this cache.release_persisted() silently leaks one O(nodes)

@@ -825,8 +825,8 @@ def v100_srp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # V104 — embedding-side cluster dedup (round 9, r8 VERDICT #5): the SRP
-# candidate pairs feed the SAME two-phase connected-components tier the
-# MinHash text pairs use (v64/v67), closing the 100 TB embedding-dedup
+# candidate pairs feed the SAME min-label connected-components operator
+# the MinHash text pairs use (v64/v67), closing the 100 TB embedding-dedup
 # path: SRP pairs -> CC (min-label survivor) -> anti-join losers out of
 # the corpus -> bucketed survivor rollup.  Everything is integer-exact
 # (SRP pairs by construction, CC labels are min-ids, the rollup sums
@@ -869,8 +869,9 @@ def v104_srp_cluster_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     component), enforced by an anti-join of the non-canonical cluster
     members against the corpus.  Vectors in no pair never enter the CC
     input and pass through untouched.  One banded shuffle for pairs,
-    log-diameter rounds of small label joins for CC, one anti-join, one
-    partial-aggregatable rollup — no all-pairs stage anywhere."""
+    one round of small label joins per hop of graph diameter for CC,
+    one anti-join, one partial-aggregatable rollup — no all-pairs stage
+    anywhere."""
     from flowbyte_spark.operators.components import neardup_clusters
     from flowbyte_spark.operators.srp import srp_neardup_pairs
 

@@ -16,6 +16,10 @@ These tests pin the contract at both granularities:
 
 from __future__ import annotations
 
+import ast
+import glob
+import importlib
+import inspect
 import json
 import os
 import shutil
@@ -26,6 +30,7 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "scripts"))
+KEPT_SCRIPTS = [*glob.glob(f"{REPO}/scripts/*.py"), f"{REPO}/bench.py"]
 
 from check_bench_artifact import check_lines  # noqa: E402
 
@@ -166,16 +171,63 @@ def test_session_factory_honors_cpus_env():
     assert "MASTER=local[3]" in proc.stdout
 
 
-def _resolves(module: str, name: str) -> bool:
-    import importlib
-    import importlib.util
-
+def _imported(module: str, name: str):
+    """What ``from module import name`` binds, or None if it fails."""
     try:
         mod = importlib.import_module(module)
         # a submodule its package does not import is not an attribute
-        return hasattr(mod, name) or bool(importlib.util.find_spec(f"{module}.{name}"))
+        if hasattr(mod, name):
+            return getattr(mod, name)
+        return importlib.import_module(f"{module}.{name}")
     except ImportError:
-        return False
+        return None
+
+
+def _library_uses(path: str) -> tuple[list[str], list[str]]:
+    """``(broken, stale)`` in one file: each ``from flowbyte_spark.X import a``
+    binding nothing, and each keyword a flowbyte_spark function without
+    ``**kwargs`` does not take, called as ``a(...)`` or ``M.f(...)`` after
+    ``import flowbyte_spark.X as M`` (lazy imports scoped to their def)."""
+    broken, stale, rel = [], [], os.path.relpath(path, REPO)
+    ours = lambda dotted: (dotted or "").split(".")[0] == "flowbyte_spark"
+
+    def resolve(expr, bound):
+        if isinstance(expr, ast.Attribute):
+            owner = resolve(expr.value, bound)
+            return getattr(owner, expr.attr, None) if inspect.ismodule(owner) else None
+        return bound.get(expr.id) if isinstance(expr, ast.Name) else None
+
+    def check(scope, bound):
+        nodes, todo = [], list(ast.iter_child_nodes(scope))
+        while todo:  # this scope only: nested defs are checked on their own
+            nodes.append(todo.pop())
+            if not isinstance(nodes[-1], (ast.FunctionDef, ast.ClassDef)):
+                todo.extend(ast.iter_child_nodes(nodes[-1]))
+        for node in nodes:
+            if isinstance(node, ast.ImportFrom) and ours(node.module):
+                for a in node.names:
+                    obj = bound[a.asname or a.name] = _imported(node.module, a.name)
+                    if obj is None:
+                        broken.append(f"{rel}:{node.lineno} {node.module}.{a.name}")
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.asname and ours(a.name):
+                        bound[a.asname] = importlib.import_module(a.name)
+        for node in nodes:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                check(node, dict(bound))
+            fn = resolve(node.func, bound) if isinstance(node, ast.Call) else None
+            if callable(fn) and ours(getattr(fn, "__module__", None)):
+                params = inspect.signature(fn).parameters
+                if all(p.kind is not p.VAR_KEYWORD for p in params.values()):
+                    stale.extend(
+                        f"{rel}:{node.lineno} {fn.__name__}({kw.arg}=)"
+                        for kw in node.keywords
+                        if kw.arg not in (None, *params)
+                    )
+
+    check(ast.parse(open(path).read()), {})
+    return broken, stale
 
 
 def test_kept_scripts_import_names_the_library_still_has():
@@ -183,17 +235,14 @@ def test_kept_scripts_import_names_the_library_still_has():
     bench.py, lazy imports inside functions included, names a module and
     attribute that exist, so a library deletion cannot silently break a
     kept script."""
-    import ast
-    import glob
-
-    paths = glob.glob(os.path.join(REPO, "scripts", "*.py"))
-    broken = [
-        f"{os.path.basename(path)}:{node.lineno} {node.module}.{alias.name}"
-        for path in paths + [os.path.join(REPO, "bench.py")]
-        for node in ast.walk(ast.parse(open(path).read()))
-        if isinstance(node, ast.ImportFrom)
-        and (node.module or "").split(".")[0] == "flowbyte_spark"
-        for alias in node.names
-        if not _resolves(node.module, alias.name)
-    ]
+    broken = [hit for path in KEPT_SCRIPTS for hit in _library_uses(path)[0]]
     assert not broken, broken
+
+
+def test_library_calls_pass_only_keywords_the_callee_takes():
+    """Every keyword that a registered query, a kept script or bench.py
+    passes to a flowbyte_spark function is one of its parameters, so a
+    removed option a query still sets fails here, not mid driver run."""
+    queries = glob.glob(f"{REPO}/flowbyte_spark/queries/*.py")
+    stale = [s for path in queries + KEPT_SCRIPTS for s in _library_uses(path)[1]]
+    assert not stale, stale

@@ -64,26 +64,3 @@ def test_pagerank_releases_every_block(spark):
         f"pagerank leaked {after - before} persisted/checkpointed blocks"
     )
 
-
-def test_shuffle_path_is_bit_identical_to_broadcast_path(spark):
-    # broadcast_ranks=False is the documented web-scale path (edges
-    # shuffle on src per round, no dst pre-partition).  Fixed-point
-    # arithmetic makes the contract strict: BOTH paths must produce
-    # IDENTICAL integer ranks, not merely close ones.
-    edges = spark.createDataFrame(
-        [(i % 23, (i * 5 + 1) % 23) for i in range(300)]
-        + [(3, 7), (7, 3), (11, 3)],
-        "src long, dst long",
-    ).where("src != dst")
-    a = {
-        r["node"]: r["rank"]
-        for r in pagerank_fixed_point(edges, iterations=4).collect()
-    }
-    b = {
-        r["node"]: r["rank"]
-        for r in pagerank_fixed_point(
-            edges, iterations=4, broadcast_ranks=False, checkpoint_every=2
-        ).collect()
-    }
-    cache.release_persisted()
-    assert a == b

@@ -1,5 +1,5 @@
-"""Unit tests for the round-2 pipeline operators: connected components
-(both algorithms), SCD2 history merge, repetition signals."""
+"""Unit tests for the round-2 pipeline operators: connected components,
+SCD2 history merge, repetition signals."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ from flowbyte_spark.operators.components import (
 )
 from flowbyte_spark.operators.merge import scd2_apply
 from flowbyte_spark.operators.text import repetition_signals
+from tests.test_tier_a_operators import _jobs_launched
 
 
 def _pairs(spark, edges):
@@ -27,53 +28,25 @@ def _labels(df):
 # connected components
 # ---------------------------------------------------------------------------
 
-@pytest.mark.parametrize("algorithm", ["label", "two-phase"])
-def test_chain_collapses_to_one_component(spark, algorithm):
-    got = _labels(
-        connected_components(
-            _pairs(spark, [(1, 2), (2, 3), (3, 4)]), algorithm=algorithm
-        )
-    )
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
+def test_chain_collapses_to_one_component(spark):
+    pairs = _pairs(spark, [(1, 2), (2, 3), (3, 4)])
+    assert _labels(connected_components(pairs)) == {1: 1, 2: 1, 3: 1, 4: 1}
     cache.release_persisted()
 
 
-@pytest.mark.parametrize("algorithm", ["label", "two-phase"])
-def test_disjoint_components_stay_apart(spark, algorithm):
-    got = _labels(
-        connected_components(
-            _pairs(spark, [(1, 2), (10, 11), (11, 12)]), algorithm=algorithm
-        )
-    )
+def test_disjoint_components_stay_apart(spark):
+    pairs = _pairs(spark, [(1, 2), (10, 11), (11, 12)])
+    got = _labels(connected_components(pairs))
     assert got == {1: 1, 2: 1, 10: 10, 11: 10, 12: 10}
     cache.release_persisted()
 
 
-@pytest.mark.parametrize("algorithm", ["label", "two-phase"])
-def test_string_ids_converge(spark, algorithm):
+def test_string_ids_converge(spark):
     # ADVICE round 2: the old sum('comp') convergence test was NULL for
     # string ids and exited after one round with wrong labels.
-    got = _labels(
-        connected_components(
-            _pairs(spark, [("b", "c"), ("a", "b"), ("x", "y")]),
-            algorithm=algorithm,
-        )
-    )
+    pairs = _pairs(spark, [("b", "c"), ("a", "b"), ("x", "y")])
+    got = _labels(connected_components(pairs))
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-    cache.release_persisted()
-
-
-def test_two_phase_path_graph_converges_in_log_rounds(spark):
-    # 200-node path: diameter 199, so label propagation would need ~200
-    # rounds.  Star contraction halves the diameter per round; 10 rounds
-    # is enough iff the O(log d) behavior holds — correct labels under
-    # max_iterations=10 ARE the convergence-speed assertion.
-    n = 200
-    pairs = _pairs(spark, [(i, i + 1) for i in range(n - 1)]).repartition(8)
-    got = _labels(
-        connected_components(pairs, max_iterations=10, algorithm="two-phase")
-    )
-    assert got == {i: 0 for i in range(n)}
     cache.release_persisted()
 
 
@@ -100,12 +73,14 @@ def test_label_many_rounds_lineage_stays_flat(spark):
     cache.release_persisted()
 
 
-def test_max_iterations_cutoff_returns_labels(spark):
+def test_max_iterations_cutoff_returns_labels(spark, capsys):
     # One round cannot collapse a 6-chain; the cutoff must still return a
     # complete (possibly unconverged) labeling, one label per node.
     pairs = _pairs(spark, [(i, i + 1) for i in range(5)])
     got = _labels(connected_components(pairs, max_iterations=1))
     assert set(got) == set(range(6))
+    err = capsys.readouterr().err
+    assert "max_iterations=1" in err and "two-phase" not in err
     cache.release_persisted()
 
 
@@ -136,9 +111,15 @@ def test_release_persisted_frees_round_caches(spark):
     assert cache.release_persisted() >= 2  # edges + final labels
 
 
-def test_unknown_algorithm_rejected(spark):
-    with pytest.raises(ValueError, match="two-phase"):
-        connected_components(_pairs(spark, [(1, 2)]), algorithm="bogus")
+def test_max_iterations_below_one_rejected(spark):
+    pairs = _pairs(spark, [(1, 2)])
+
+    def rejected(bad):
+        with pytest.raises(ValueError, match="max_iterations must be >= 1"):
+            connected_components(pairs, max_iterations=bad)
+
+    # rejected before the edge cache or any round job is planned
+    assert _jobs_launched(spark, lambda: [rejected(0), rejected(-1)]) == 0
 
 
 def test_repetition_signals_rejects_output_name_collision(spark):
@@ -159,8 +140,6 @@ def test_checkpoint_excludes_lazy_input_caches(spark):
     # LogicalRDD id) — a lazy cache materializing inside the call must
     # NOT land in the handle, and releasing the handle must leave the
     # cache resident.
-    from pyspark.sql import functions as F
-
     sc = spark.sparkContext
     inp = spark.range(1000).withColumn("x", F.col("id") % 7).persist()
     try:
@@ -181,8 +160,7 @@ def test_checkpoint_excludes_lazy_input_caches(spark):
         inp.unpersist()
 
 
-@pytest.mark.parametrize("algorithm", ["label", "two-phase"])
-def test_reliable_checkpoint_dir_rounds(spark, tmp_path, algorithm):
+def test_reliable_checkpoint_dir_rounds(spark, tmp_path):
     # VERDICT r4 #3: with checkpoint_dir set, rounds go through reliable
     # checkpoints (files that survive executor loss) with the same
     # deterministic release accounting: superseded rounds are deleted as
@@ -192,7 +170,7 @@ def test_reliable_checkpoint_dir_rounds(spark, tmp_path, algorithm):
     ckdir = str(tmp_path / "ck")
     pairs = _pairs(spark, [(i, i + 1) for i in range(7)])
     got = _labels(
-        connected_components(pairs, algorithm=algorithm, checkpoint_dir=ckdir)
+        connected_components(pairs, checkpoint_dir=ckdir)
     )
     assert got == {i: 0 for i in range(8)}
 
@@ -202,9 +180,8 @@ def test_reliable_checkpoint_dir_rounds(spark, tmp_path, algorithm):
             found += [d for d in dirs if d.startswith("rdd-")]
         return found
 
-    # at most the final round's files are resident mid-flight (label keeps
-    # exactly one, two-phase materializes labels off the final edge set
-    # and frees it already)
+    # at most the final round's files are resident mid-flight: every
+    # superseded round was deleted as the next one materialized
     assert len(rdd_dirs()) <= 1, rdd_dirs()
     cache.release_persisted()
     assert rdd_dirs() == []

@@ -1,10 +1,10 @@
 """Property-based check for connected components (SURVEY.md §5.2 style):
 random edge lists vs a pure-Python union-find oracle.
 
-Round 3 shipped a two-phase CC whose bug only surfaced on a graph SHAPE
-(long path) no hand-written case covered.  Hypothesis draws arbitrary
-shapes — chains, stars, cliques, disjoint mixes — and both algorithms
-must agree with union-find on every one.  Example counts stay small
+Round 3 shipped a CC whose bug only surfaced on a graph SHAPE (long
+path) no hand-written case covered.  Hypothesis draws arbitrary shapes —
+chains, stars, cliques, disjoint mixes — and min-label propagation must
+agree with union-find on every one.  Example counts stay small
 (each CC run is several Spark jobs); shape diversity is the point.
 """
 
@@ -59,14 +59,10 @@ def _union_find_labels(edges):
     return {n: min(ms) for r, ms in members.items() for n in ms}
 
 
-@pytest.mark.parametrize("algorithm", ["label", "two-phase"])
 @given(edges=edge_strategy)
 @SETTINGS
-def test_components_match_union_find(spark, algorithm, edges):
+def test_components_match_union_find(spark, edges):
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    got = {
-        r["id"]: r["comp"]
-        for r in connected_components(pairs, algorithm=algorithm).collect()
-    }
+    got = {r["id"]: r["comp"] for r in connected_components(pairs).collect()}
     assert got == _union_find_labels(edges)
     cache.release_persisted()
